@@ -7,12 +7,14 @@ DuckDB oracle (see geo_linked_open_data_kg_spark/queries.py).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from geo_linked_open_data_kg_spark import queries as q  # noqa: E402
 

@@ -24,7 +24,11 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# the Python workers Spark starts import the package from here too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from geo_linked_open_data_kg_spark.fixtures.generate import synth_dir_for  # noqa: E402
 from geo_linked_open_data_kg_spark.session import get_spark  # noqa: E402

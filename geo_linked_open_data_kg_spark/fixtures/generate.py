@@ -1,6 +1,6 @@
 """Deterministic synthetic fixtures for the KG-construction pipeline.
 
-Realizes the schemas in /root/repo/FIXTURES.md: an interleaved text+media
+Realizes the schemas in FIXTURES.md (checkout root): an interleaved text+media
 document corpus (``documents``), a GeoNames-shaped gazetteer (``places``),
 filtered Wikidata projections (``wikidata_places``, ``persons``,
 ``organizations``), a dated CSV source (``post_offices``), plus lookup
@@ -752,7 +752,11 @@ def write_centroids(out_dir: str, sf: str) -> None:
         f"{out_dir}/kmeans_centroids.parquet")
 
 
-SYNTH_ROOT = "/root/repo/synthdata"
+# <checkout>/synthdata, next to the package
+SYNTH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))),
+    "synthdata")
 
 
 def ensure_synth(sf: str) -> str:

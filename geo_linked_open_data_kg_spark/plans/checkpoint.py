@@ -6,6 +6,15 @@ MERGE idempotency: each pipeline stage writes its output once to a
 checkpoint table; a re-run skips stages whose checkpoint exists
 (_SUCCESS marker semantics come free with Spark's parquet committer).
 
+A stage commit costs one Spark job, the data write (plus one per-pred
+count for a triple table not partitioned by pred): its row count, its
+per-task lineage and (for a pred-partitioned table) its per-pred triple
+counts are read from the written files' parquet footers and directory
+names on the driver, and the small `_lineage`/`_metrics` tables are
+written with pyarrow. Build time at small inputs is bound by per-job
+latency, so a commit that re-scanned its output would cost more than
+the stage's own write.
+
 Production target is Iceberg (snapshot commit per stage, MERGE INTO for
 incremental re-runs); this module uses plain parquet paths so the local
 harness has no catalog dependency — the stage protocol is identical.
@@ -14,9 +23,16 @@ harness has no catalog dependency — the stage protocol is identical.
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
+from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+# the directory value Spark writes for a null partition column
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 class CheckpointStore:
@@ -41,7 +57,6 @@ class CheckpointStore:
         way data, lineage and metrics always describe the SAME snapshot
         (round-4 ADVICE: the old per-sub swap could strand lineage and
         data on different merges)."""
-        import shutil
         if os.path.exists(self._marker(stage)):
             self._promote(stage)
             return
@@ -65,7 +80,6 @@ class CheckpointStore:
         """Swap every written shadow sub into place, then clear the
         commit marker. Idempotent: a sub whose shadow is already gone
         was swapped before the crash and is skipped."""
-        import shutil
         for sub in ("", "_lineage", "_metrics"):
             src = os.path.join(self.root, sub, f"{stage}__merge_tmp")
             dst = os.path.join(self.root, sub, stage)
@@ -86,70 +100,65 @@ class CheckpointStore:
               label: str | None = None,
               extra_metrics: list[tuple[str, int]] | None = None
               ) -> DataFrame:
-        """Write stage output + lineage (per-partition row counts) +
-        metrics (total rows, and triple counts per pred if present).
+        """Write stage output + lineage (per-write-task row counts) +
+        metrics (total rows, and triple counts per pred if present), and
+        return the written table.
+
+        The data write is the commit's only Spark job, except that an
+        output with a `pred` column it is not partitioned by needs one
+        `groupBy("pred").count()` over the written files. Everything
+        else is read on the driver: row counts from the parquet footers
+        (a part file's name carries the id of the task that wrote it,
+        which is the lineage `partition_id`), per-pred counts of a
+        pred-partitioned output from its `pred=` directories, and the
+        returned table re-reads the files with the schema `df` already
+        has, so no schema-inference job runs. `_lineage` and `_metrics`
+        are written with pyarrow.
+
         `label` overrides the stage name recorded IN lineage/metrics rows
         (used by merge_upsert's shadow write). `extra_metrics` appends
         caller-supplied (metric, value) rows — e.g. the CC convergence
         audit (canonicalize.LAST_CC_STATS)."""
         label = label or stage
+        path = self.path(stage)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(self.path(stage))
+        w.parquet(path)
+        out = df.sparkSession.read.schema(df.schema).parquet(path)
 
-        spark = df.sparkSession
-        out = self.read(spark, stage)
+        files = _part_files(path)
+        lineage: Counter = Counter()
+        for rel, n in files:
+            lineage[int(os.path.basename(rel).split("-")[1])] += n
+        per_pred: Counter = Counter()
+        if "pred" in (partition_by or []):
+            for rel, n in files:
+                per_pred[_partition_value(rel, "pred")] += n
+        elif "pred" in df.columns:
+            per_pred.update(dict(out.groupBy("pred").count().collect()))
+        metrics = [("n_rows", lineage.total())]
+        metrics += [(None if p is None else f"n_triples:{p}", n)
+                    for p, n in sorted(per_pred.items(),
+                                       key=lambda kv: kv[0] or "")]
+        metrics += [(m, int(v)) for m, v in extra_metrics or []]
 
-        # ONE scan of the stage output serves lineage AND every metric
-        # (round 6): the (partition, pred) count cube is tiny (partitions
-        # x preds), so it is cached and both tables derive from it —
-        # previously lineage, the total count and the per-pred counts
-        # each re-scanned the written parquet (3-4 jobs per stage, ~18
-        # extra jobs per pipeline run of pure serial latency).
-        has_pred = "pred" in out.columns
-        gcols = [F.spark_partition_id().alias("partition_id")]
-        if has_pred:
-            gcols.append(F.col("pred"))
-        # coalesce(1) BEFORE persist: cached plans do not get AQE
-        # partition coalescing (canChangeCachedPlanOutputPartitioning
-        # defaults false), so without it the tiny cube materializes and
-        # is re-read at the full shuffle-partition count — measured as
-        # ~22 extra 256-task stages per pipeline run. The cube is
-        # (partitions x preds) rows, so one partition holds it at any
-        # corpus size.
-        counts = (out.groupBy(*gcols)
-                  .agg(F.count("*").alias("n_rows"))
-                  .coalesce(1)
-                  .persist())
-
-        lineage = (counts.groupBy("partition_id")
-                   .agg(F.sum("n_rows").alias("n_rows"))
-                   .withColumn("stage", F.lit(label)))
-        lineage.write.mode("overwrite").parquet(
-            os.path.join(self.root, "_lineage", stage))
-
-        metrics = counts.agg(
-            F.coalesce(F.sum("n_rows"), F.lit(0)).alias("value")).select(
-            F.lit(label).alias("stage"), F.lit("n_rows").alias("metric"),
-            F.col("value"))
-        if has_pred:
-            per_pred = (counts.groupBy("pred")
-                        .agg(F.sum("n_rows").alias("value"))
-                        .select(F.lit(label).alias("stage"),
-                                F.concat(F.lit("n_triples:"),
-                                         F.col("pred")).alias("metric"),
-                                F.col("value")))
-            metrics = metrics.unionByName(per_pred)
-        if extra_metrics:
-            extra = spark.createDataFrame(
-                [(label, m, int(v)) for m, v in extra_metrics],
-                "stage string, metric string, value long")
-            metrics = metrics.unionByName(extra)
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(self.root, "_metrics", stage))
-        counts.unpersist()
+        pids = sorted(p for p, n in lineage.items() if n)
+        self._write_table("_lineage", stage, pa.table({
+            "partition_id": pa.array(pids, pa.int32()),
+            "n_rows": pa.array([lineage[p] for p in pids], pa.int64()),
+            "stage": pa.array([label] * len(pids), pa.string())}))
+        self._write_table("_metrics", stage, pa.table({
+            "stage": pa.array([label] * len(metrics), pa.string()),
+            "metric": pa.array([m for m, _ in metrics], pa.string()),
+            "value": pa.array([v for _, v in metrics], pa.int64())}))
         return out
+
+    def _write_table(self, sub: str, stage: str, table: pa.Table) -> None:
+        d = os.path.join(self.root, sub, stage)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        pq.write_table(table, os.path.join(d, "part-00000.parquet"))
 
     def get_or_compute(self, spark: SparkSession, stage: str, compute,
                        partition_by: list[str] | None = None,
@@ -204,3 +213,27 @@ class CheckpointStore:
             fh.write("promote\n")
         self._promote(stage)
         return self.read(spark, stage)
+
+
+def _part_files(path: str) -> list[tuple[str, int]]:
+    """(path relative to `path`, row count from its footer) of every
+    parquet part file a Spark write committed under `path`."""
+    out = []
+    for d, subs, names in os.walk(path):
+        subs[:] = [s for s in subs if not s.startswith(("_", "."))]
+        for n in names:
+            if n.startswith("part-"):
+                f = os.path.join(d, n)
+                out.append((os.path.relpath(f, path),
+                            pq.read_metadata(f).num_rows))
+    return out
+
+
+def _partition_value(rel: str, col: str) -> str | None:
+    """The value of partition column `col` in a part file's relative
+    path (`col=<value>/...`), unescaped the way Spark escapes it."""
+    for part in rel.split(os.sep)[:-1]:
+        key, _, value = part.partition("=")
+        if key == col:
+            return None if value == _HIVE_NULL else unquote(value)
+    raise ValueError(f"no {col}= directory in {rel}")

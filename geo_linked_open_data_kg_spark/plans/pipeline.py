@@ -195,7 +195,10 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
                               .alias("cell")))
         return (canon.join(subj_cells, "subj", "left")
                 .withColumn("cell", F.coalesce(F.col("cell"), F.lit(-1)))
-                .repartition("pred", "cell")
+                # an explicit count: AQE coalesces a count-less
+                # repartition of this small input into ONE write task;
+                # each (pred, cell) still hashes to a single task
+                .repartition(n_part, "pred", "cell")
                 .select(*TRIPLE_COLS, "cell"))
 
     edges = ckpt.get_or_compute(

@@ -13,6 +13,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo",
+                          cgroup_limits: tuple[str, ...] = (
+                              "/sys/fs/cgroup/memory.max",
+                              "/sys/fs/cgroup/memory/memory.limit_in_bytes"),
+                          ) -> str:
+    """Driver heap default: half the memory this process may use (the
+    host's MemTotal, or a smaller cgroup v2 `memory.max` / v1 limit),
+    capped at 16g. A heap sized past physical memory lets the kernel
+    OOM-kill the JVM instead of Spark spilling."""
+    with open(meminfo) as fh:
+        avail = next(int(line.split()[1]) * 1024 for line in fh
+                     if line.startswith("MemTotal:"))
+    for path in cgroup_limits:
+        try:
+            with open(path) as fh:
+                limit = fh.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            avail = min(avail, int(limit))
+    return f"{min(16 * 1024, avail // 2 // 2**20)}m"
+
+
 def get_spark(app: str = "geo_kg", cores: int | None = None,
               shuffle_partitions: int | None = None,
               master: str | None = None,
@@ -54,7 +77,12 @@ def get_spark(app: str = "geo_kg", cores: int | None = None,
         # back to 4194304.
         .config("spark.sql.files.openCostInBytes",
                 os.environ.get("SPARK_GRAFT_OPEN_COST", "131072"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
+        # one pipeline build generates 430-480 distinct classes; Spark's
+        # default cache holds 100, so every warm build recompiled ~460 of
+        # them (CodegenMetrics). 1000 keeps a whole build's classes.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -2,7 +2,7 @@
 
 Driver tables (/root/testdata/sf*/): region nation customer supplier part
 orders lineitem events documents embeddings.
-Synth tables (/root/repo/synthdata/sf*/): places wikidata_places persons
+Synth tables (<checkout>/synthdata/sf*/): places wikidata_places persons
 organizations post_offices geo_documents mention_truth feature_priority
 wd_type_priority admin1_names hyperplanes kmeans_centroids.
 """

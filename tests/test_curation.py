@@ -14,15 +14,12 @@ A crafted corpus where every stage has a known victim:
 from __future__ import annotations
 
 import shutil
-import sys
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.plans.curation import (  # noqa: E402
+from geo_linked_open_data_kg_spark.plans.curation import (
     run_curation_pipeline,
 )
 

@@ -6,15 +6,11 @@ all-pairs cartesian join."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark import queries as q  # noqa: E402
-from geo_linked_open_data_kg_spark.operators.dedup import (  # noqa: E402
+from geo_linked_open_data_kg_spark import queries as q
+from geo_linked_open_data_kg_spark.operators.dedup import (
     hot_shingles,
     ngram_jaccard_pairs,
     simhash,

@@ -3,28 +3,23 @@ FIXTURES.md §8 golden-case checklist)."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.operators.canonicalize import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.canonicalize import (
     connected_components,
     rewrite_triples,
 )
-from geo_linked_open_data_kg_spark.operators.direct_link import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.direct_link import (
     direct_id_links,
 )
-from geo_linked_open_data_kg_spark.operators.spatial import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.spatial import (
     spatial_links,
 )
 
 
 def _places(spark, rows):
     return spark.createDataFrame([Row(**r) for r in rows])
-
 
 PLACE_BASE = dict(ascii_name="x", alternate_names=["alt"], admin2_code="001",
                   admin3_code="0001", admin4_code="0", elevation=0,

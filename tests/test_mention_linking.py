@@ -4,16 +4,13 @@ plus the per-row span-sequence invariant from BASELINE.json input_hint.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+from geo_linked_open_data_kg_spark.fixtures.generate import synth_dir_for
+from geo_linked_open_data_kg_spark.operators.linking import link_mentions
 
-from geo_linked_open_data_kg_spark.operators.linking import link_mentions  # noqa: E402
-
-D = "/root/repo/synthdata/sf0.001"
+D = synth_dir_for("sf0.001")
 
 
 @pytest.fixture(scope="module")

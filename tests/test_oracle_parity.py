@@ -6,14 +6,11 @@ Spark at sf0.01 and its oracle_sql() twin on DuckDB, compare row multisets
 from __future__ import annotations
 
 import math
-import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
 DRIVER_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

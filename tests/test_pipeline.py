@@ -3,17 +3,18 @@
 from __future__ import annotations
 
 import shutil
-import sys
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.plans.pipeline import run_pipeline  # noqa: E402
+from geo_linked_open_data_kg_spark.plans.pipeline import run_pipeline
 
 SF_DIR = "/root/testdata/sf0.001"
+STAGES = ["linked_mentions", "mention_triples", "gazetteer_triples", "nodes",
+          "canonical_triples", "edges"]
+METRICS_SCHEMA = "struct<stage:string,metric:string,value:bigint>"
+LINEAGE_SCHEMA = "struct<partition_id:int,n_rows:bigint,stage:string>"
 
 
 @pytest.fixture(scope="module")
@@ -83,9 +84,70 @@ def test_metrics_and_lineage_written(spark, out_dir):
     # canonicalization stage records rounds_run + converged
     assert rows["cc_converged"] == 1, rows
     assert 1 <= rows["cc_rounds_run"] <= 25, rows
-    lin = spark.read.parquet(f"{out_dir}/_lineage/gazetteer_triples")
-    assert lin.agg(F.sum("n_rows")).collect()[0][0] == \
-        spark.read.parquet(f"{out_dir}/gazetteer_triples").count()
+    # commit contract: the counts a commit reads from parquet footers
+    # and pred= directories equal a Spark count of every stage table
+    import os
+    assert sorted(os.listdir(f"{out_dir}/_metrics")) == sorted(STAGES)
+    for stage in STAGES:
+        table = spark.read.parquet(f"{out_dir}/{stage}")
+        m = spark.read.parquet(f"{out_dir}/_metrics/{stage}")
+        assert m.schema.simpleString() == METRICS_SCHEMA, stage
+        rows = {r["metric"]: r["value"] for r in m.collect()}
+        assert {r["stage"] for r in m.collect()} == {stage}
+        assert rows["n_rows"] == table.count(), stage
+        if "pred" in table.columns:
+            want = {f"n_triples:{r['pred']}": r["count"]
+                    for r in table.groupBy("pred").count().collect()}
+            assert {k: v for k, v in rows.items()
+                    if k.startswith("n_triples:")} == want, stage
+        lin = spark.read.parquet(f"{out_dir}/_lineage/{stage}")
+        assert lin.schema.simpleString() == LINEAGE_SCHEMA, stage
+        assert lin.agg(F.sum("n_rows")).first()[0] == rows["n_rows"], stage
+        assert {r["stage"] for r in lin.collect()} == {stage}
+
+
+def test_commit_runs_only_the_write_job(spark, tmp_path):
+    """A stage commit of an unpartitioned table with no pred column is
+    one Spark job, the write; a pred-partitioned commit reads its
+    per-pred counts from the (escaped) pred= directory names; a
+    merge_upsert shadow write records the real stage label."""
+    from geo_linked_open_data_kg_spark.plans.checkpoint import (
+        CheckpointStore,
+    )
+    store = CheckpointStore(str(tmp_path))
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(i, f"n{i}") for i in range(20)],
+                               "id long, name string")
+    group = "test-commit-jobs"
+    sc.setJobGroup(group, "one checkpoint commit")
+    try:
+        out = store.write(df, "small")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert out.schema == df.schema
+    assert sorted(out.collect()) == sorted(df.collect())
+    lin = spark.read.parquet(f"{tmp_path}/_lineage/small")
+    assert lin.agg(F.sum("n_rows")).first()[0] == 20
+
+    triples = spark.createDataFrame(
+        [("s1", "has:colon", "o"), ("s2", "has:colon", "o"),
+         ("s3", "has space", "o"), ("s4", "a/b=c%", "o"),
+         ("s5", None, "o")],
+        "subj string, pred string, obj string")
+    store.write(triples, "by_pred", partition_by=["pred"])
+    rows = {r["metric"]: r["value"] for r in
+            spark.read.parquet(f"{tmp_path}/_metrics/by_pred").collect()}
+    assert rows == {"n_rows": 5, "n_triples:has:colon": 2,
+                    "n_triples:has space": 1, "n_triples:a/b=c%": 1,
+                    None: 1}
+
+    store.merge_upsert(df, "merged", keys=["id"])
+    store.merge_upsert(df.limit(3), "merged", keys=["id"])
+    for sub in ("_metrics", "_lineage"):
+        t = spark.read.parquet(f"{tmp_path}/{sub}/merged")
+        assert {r["stage"] for r in t.collect()} == {"merged"}, sub
+    assert store.read(spark, "merged").count() == 20
 
 
 def test_merge_upsert_incremental_document_update(spark):

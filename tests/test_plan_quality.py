@@ -5,13 +5,10 @@ output so refactors can't silently regress them."""
 from __future__ import annotations
 
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
+import pytest
 
-import pytest  # noqa: E402
-
-from geo_linked_open_data_kg_spark import queries as q  # noqa: E402
+from geo_linked_open_data_kg_spark import queries as q
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -5,19 +5,17 @@ from __future__ import annotations
 
 import glob
 import json
-import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.sources.sinks import (  # noqa: E402
+from geo_linked_open_data_kg_spark.fixtures.generate import synth_dir_for
+from geo_linked_open_data_kg_spark.sources.sinks import (
     write_json_documents,
     write_ndjson_gz,
     read_ndjson,
 )
 
-D = "/root/repo/synthdata/sf0.001"
+D = synth_dir_for("sf0.001")
 
 
 def test_ndjson_gz_round_trip_preserves_spans(spark, tmp_path):

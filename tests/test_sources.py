@@ -3,25 +3,21 @@ re-executed as tiny-oracle cases (SURVEY.md §5 golden-case checklist)."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Row
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.sources.geonames import (  # noqa: E402
+from geo_linked_open_data_kg_spark.sources.geonames import (
     GEONAMES_RAW_SCHEMA,
     apply_filters,
     parse_geonames,
 )
-from geo_linked_open_data_kg_spark.sources.post_offices import (  # noqa: E402
+from geo_linked_open_data_kg_spark.sources.post_offices import (
     parse_post_offices,
 )
-from geo_linked_open_data_kg_spark.sources.rdf import (  # noqa: E402
+from geo_linked_open_data_kg_spark.sources.rdf import (
     extract_uri_id,
     two_hop,
 )
-from geo_linked_open_data_kg_spark.sources.wikidata import (  # noqa: E402
+from geo_linked_open_data_kg_spark.sources.wikidata import (
     extract_geo_entities,
     parse_error_counts,
     person_gate,

@@ -3,14 +3,11 @@
 from __future__ import annotations
 
 import shutil
-import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.streaming.events import (  # noqa: E402
+from geo_linked_open_data_kg_spark.streaming.events import (
     read_events_stream,
     run_available_now,
     windowed_counts,

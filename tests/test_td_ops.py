@@ -6,21 +6,18 @@ the folded person/org edge-union registry slots."""
 from __future__ import annotations
 
 import hashlib
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark import queries as q  # noqa: E402
-from geo_linked_open_data_kg_spark.operators.dedup import (  # noqa: E402
+from geo_linked_open_data_kg_spark import queries as q
+from geo_linked_open_data_kg_spark.operators.dedup import (
     decontaminate,
 )
-from geo_linked_open_data_kg_spark.operators.packing import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.packing import (
     sequence_packing,
 )
-from geo_linked_open_data_kg_spark.operators.textstats import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.textstats import (
     PII_SAMPLE_DOCS,
     REPETITION_SAMPLE_DOCS,
     pii_stats,
