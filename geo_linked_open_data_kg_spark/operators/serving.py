@@ -1,27 +1,30 @@
-"""Point-radius serving queries over the materialized graph tables.
+"""Serving reads over the materialized graph: a point-radius lookup and
+the k-hop ego graph, the two reads the reference serves from its Neo4j
+graph (a POINT index and `MATCH (n)-[r*..k]-(m)`).
 
-The (pred, cell) hive layout the pipeline writes (plans/pipeline.py:154-177,
-the north rule's "partitioned by H3 cell and predicate") exists so that the
-interactive read path never scans the full edge table: a "what is near this
-point" lookup enumerates the handful of coarse grid boxes intersecting the
-search disc (functions/geo.coarse_cells_covering — driver-side, O(cells))
-and lets Catalyst turn (pred = X AND cell IN (...)) into PartitionFilters,
-i.e. directory pruning BEFORE any file is opened. The coarse grid has
-288 cells (12 bands x 24 columns), so the table splits into at most
-~290 dirs per predicate (+ the -1 coordinate-free dir); a 100 km query
-touches 1-4 cell dirs of ONE predicate — a few thousandths of the table
-at any corpus size (measured at sf0.1: 0-2 of 294 files per query,
-scripts/serving_bench.py).
+The edges table is written `partitionBy(pred, cell)`, where cell is the
+subject's coarse grid box (functions/geo.coarse_cell), and every row
+carries its subject's coordinate (`s_lat`, `s_lon`;
+plans/pipeline.edge_table). So the layout is the index:
 
-Reference analog: the Neo4j serving graph answers these with a POINT index
-(scripts/linkers/link_spatial_optimized.py:35-55); here the layout IS the
-index.
+- `nearby_edges` enumerates, on the driver, the coarse boxes that
+  intersect the search disc (functions/geo.coarse_cells_covering) and
+  reads only the `pred=<pred>/cell=<c>` directories of that cover that
+  exist, with an explicit schema: the edge root is never listed, no
+  schema-inference job runs, and the nodes table is not read. The rows
+  are bbox-filtered and haversine-refined on their own `s_lat`/`s_lon`.
+  The coarse grid has 288 cells, so a 100 km read opens 1-4 directories
+  of one predicate whatever the corpus size.
+- `ego_edges` scans the edge table once per hop for the edges that touch
+  the frontier and expands on the driver; hop rows are ego-graph-sized.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,46 +34,45 @@ from geo_linked_open_data_kg_spark.functions.geo import (
     coarse_cells_covering,
     haversine_km,
 )
+from geo_linked_open_data_kg_spark.plans.checkpoint import partition_dir
+from geo_linked_open_data_kg_spark.plans.pipeline import (
+    EDGES_SCHEMA,
+    TRIPLE_COLS,
+)
+
+NEARBY_SCHEMA = ("subj string, pred string, obj string, confidence double,"
+                 " evidence string, dist_km double")
+EGO_SCHEMA = ("subj string, pred string, obj string, confidence double,"
+              " evidence string, hop int")
 
 
 def nearby_edges(spark: SparkSession, graph_dir: str, pred: str,
-                 lat: float, lon: float, radius_km: float,
-                 nodes: DataFrame | None = None) -> DataFrame:
+                 lat: float, lon: float, radius_km: float) -> DataFrame:
     """Edges of one predicate whose SUBJECT lies within radius_km of the
-    query point, exact (haversine-refined) on top of partition pruning.
+    query point: the (pred, cell) directories of the disc's cover,
+    refined exactly by haversine distance on the stored subject
+    coordinate.
 
     Output: (subj, pred, obj, confidence, evidence, dist_km), dist_km
-    rounded to 3 decimals. Pass `nodes` to reuse an already-loaded nodes
-    DataFrame; otherwise reads `{graph_dir}/nodes`.
+    rounded to 3 decimals. Raises ValueError on an edges table written
+    without `s_lat`/`s_lon`.
     """
-    cells = coarse_cells_covering(lat, lon, radius_km)
-    edges = (spark.read.parquet(f"{graph_dir}/edges")
-             .where((F.col("pred") == pred)
-                    & F.col("cell").isin([int(c) for c in cells])))
-    nd = nodes if nodes is not None else \
-        spark.read.parquet(f"{graph_dir}/nodes")
-    # ONE canonical coordinate per subject id — the lexicographic
-    # struct-min, the SAME representative the writer's cell assignment
-    # uses (pipeline.py:_edges), so a subject's layout partition and its
-    # serving refine can never disagree (a componentwise min(lat),
-    # min(lon) could name a coordinate no row has). Aggregate FIRST,
-    # bbox-filter the aggregated dim AFTER: filtering rows before the
-    # min would make the representative query-dependent for any id with
-    # several coordinate rows. The null filter still pushes to the scan;
-    # the dim this aggregates is the nodes table, orders of magnitude
-    # smaller than the edge table the cell pruning is protecting.
-    canon = F.min(F.struct("latitude", "longitude")).alias("c")
-    coords = (nd.where(F.col("latitude").isNotNull())
-              .groupBy(F.col("id").alias("subj")).agg(canon)
-              .select("subj", F.col("c.latitude").alias("_lat"),
-                      F.col("c.longitude").alias("_lon")))
-    # generous bbox on the aggregated dim so the broadcast below stays
-    # disc-sized at ANY corpus size; haversine refines exactly.
-    # Longitude half-width via the rigorous haversine bound (the planar
-    # r/(111*cos) width under-covers at high latitude — code review);
-    # a disc that reaches a pole keeps every longitude.
+    root = os.path.join(graph_dir, "edges")
+    pred_dir = os.path.join(root, partition_dir("pred", pred))
+    dirs = [d for d in (os.path.join(pred_dir, f"cell={int(c)}")
+                        for c in coarse_cells_covering(lat, lon, radius_km))
+            if os.path.isdir(d)]
+    if not dirs:
+        return spark.createDataFrame([], NEARBY_SCHEMA)
+    _require_subject_coords(dirs[0])
+    edges = (spark.read.schema(EDGES_SCHEMA).option("basePath", root)
+             .parquet(*dirs))
+    # generous bbox, pushed to the parquet scan; haversine refines
+    # exactly. Longitude half-width via the rigorous haversine bound
+    # (the planar r/(111*cos) width under-covers at high latitude —
+    # code review); a disc that reaches a pole keeps every longitude.
     r_deg = radius_km / KM_PER_DEG_LAT
-    lat_ok = F.col("_lat").between(lat - r_deg, lat + r_deg)
+    lat_ok = F.col("s_lat").between(lat - r_deg, lat + r_deg)
     phi_far = min(89.9, abs(lat) + r_deg)
     s = math.sin(min(radius_km / EARTH_RADIUS_KM, math.pi) / 2.0) \
         / max(1e-12, math.sqrt(math.cos(math.radians(min(abs(lat), 89.9)))
@@ -82,73 +84,69 @@ def nearby_edges(spark: SparkSession, graph_dir: str, pred: str,
         lo_w, hi_w = lon - dlon, lon + dlon
         if lo_w < -180.0 or hi_w > 180.0:  # antimeridian wrap: 2 windows
             lon_ok = \
-                (F.col("_lon") >= ((lo_w + 540.0) % 360.0 - 180.0)) \
-                | (F.col("_lon") <= ((hi_w + 540.0) % 360.0 - 180.0))
+                (F.col("s_lon") >= ((lo_w + 540.0) % 360.0 - 180.0)) \
+                | (F.col("s_lon") <= ((hi_w + 540.0) % 360.0 - 180.0))
         else:
-            lon_ok = F.col("_lon").between(lo_w, hi_w)
-    coords = coords.where(lat_ok & lon_ok)
-    dist = haversine_km(F.col("_lat"), F.col("_lon"),
+            lon_ok = F.col("s_lon").between(lo_w, hi_w)
+    dist = haversine_km(F.col("s_lat"), F.col("s_lon"),
                         F.lit(float(lat)), F.lit(float(lon)))
-    return (edges.join(F.broadcast(coords), "subj")
+    return (edges.where(lat_ok & lon_ok)
             .withColumn("dist_km", F.round(dist, 3))
             .where(F.col("dist_km") <= radius_km)
-            .select("subj", "pred", "obj", "confidence", "evidence",
-                    "dist_km"))
+            .select(*TRIPLE_COLS, "dist_km"))
+
+
+def _require_subject_coords(cell_dir: str) -> None:
+    """Refuse an edges table written before edges carried their subject
+    coordinate: its rows would read null `s_lat`/`s_lon`, which the
+    distance filter drops, so every read would come back empty."""
+    part = next(os.path.join(cell_dir, n)
+                for n in sorted(os.listdir(cell_dir))
+                if n.endswith(".parquet"))
+    missing = [c for c in ("s_lat", "s_lon")
+               if c not in pq.read_schema(part).names]
+    if missing:
+        raise ValueError(
+            f"edges table {os.path.dirname(os.path.dirname(cell_dir))} has"
+            f" no {', '.join(missing)} column(s): it was written before"
+            " edges stored their subject coordinate. Rebuild the edges"
+            " stage (delete the edges directory and re-run run_pipeline,"
+            " which recomputes only that stage).")
 
 
 def ego_edges(spark: SparkSession, graph_dir: str, start_ids: list[str],
               k: int = 2, preds: list[str] | None = None) -> DataFrame:
-    """The k-hop ego graph around a set of node ids — the MATCH
-    (n)-[r*..k]-(m) read a Neo4j user runs against the reference's
-    serving graph (undirected expansion, like Cypher's unanchored
-    relationship pattern).
+    """The k-hop ego graph around a set of node ids: the undirected
+    expansion of Cypher's `MATCH (n)-[r*..k]-(m)`.
 
     Output: (subj, pred, obj, confidence, evidence, hop) where hop is
     the expansion round (1-based) that first reached the edge; each
     (subj, pred, obj) appears once. `preds` restricts the traversal to
-    those predicates (and prunes the scan's partition dirs).
+    those predicates (and prunes the scan to their directories).
 
-    Scale shape: the frontier is ego-graph-sized (thousands at most),
-    so each hop is TWO broadcast-hash semi-joins against the edge scan
-    (one per endpoint — an OR-condition join would degrade to a nested
-    loop) union-deduped; zero shuffles of the full edge table, no
-    driver-side edge materialization. The per-hop collect is the
-    frontier's node ids only (bounded by the ego graph, never the
-    corpus). Hub blow-ups are the caller's k to manage, not a hidden
-    cap (no silent caps).
+    Each hop is one scan of the edge table for the edges with an
+    endpoint in the frontier, collected to the driver, which dedups
+    them and derives the next frontier. The collected rows are the ego
+    graph itself, never the corpus; a hub's blow-up is the caller's k
+    to manage, not a hidden cap (no silent caps).
     """
-    edges = spark.read.parquet(f"{graph_dir}/edges")
+    edges = spark.read.schema(EDGES_SCHEMA).parquet(
+        os.path.join(graph_dir, "edges"))
     if preds:
         edges = edges.where(F.col("pred").isin(list(preds)))
-    edges = edges.select("subj", "pred", "obj", "confidence", "evidence")
+    edges = edges.select(*TRIPLE_COLS)
 
     seen_nodes = {str(s) for s in start_ids}
-    frontier = list(seen_nodes)
-    out: DataFrame | None = None
+    frontier = sorted(seen_nodes)
+    out: dict[tuple, tuple] = {}
     for hop in range(1, k + 1):
         if not frontier:
             break
-        fr = F.broadcast(spark.createDataFrame(
-            [(n,) for n in frontier], "node string"))
-        hit = (edges.join(fr, edges.subj == fr.node, "left_semi")
-               .unionByName(
-                   edges.join(fr, edges.obj == fr.node, "left_semi"))
-               .dropDuplicates(["subj", "pred", "obj"])
-               .withColumn("hop", F.lit(hop))
-               .localCheckpoint())  # pin: `edges` re-scan per consumer
-        out = hit if out is None else (
-            out.unionByName(hit.join(
-                out.select("subj", "pred", "obj"),
-                ["subj", "pred", "obj"], "left_anti")))
-        out = out.localCheckpoint()
-        reached = (hit.select(F.col("subj").alias("node"))
-                   .unionByName(hit.select(F.col("obj").alias("node")))
-                   .distinct().collect())
-        frontier = [r["node"] for r in reached
-                    if r["node"] not in seen_nodes]
-        seen_nodes.update(frontier)
-    if out is None:
-        return spark.createDataFrame(
-            [], "subj string, pred string, obj string, confidence double,"
-                " evidence string, hop int")
-    return out
+        reached = set()
+        for r in edges.where(F.col("subj").isin(frontier)
+                             | F.col("obj").isin(frontier)).collect():
+            out.setdefault((r["subj"], r["pred"], r["obj"]), (*r, hop))
+            reached.update((r["subj"], r["obj"]))
+        frontier = sorted(reached - seen_nodes)
+        seen_nodes |= reached
+    return spark.createDataFrame(list(out.values()), EGO_SCHEMA)

@@ -33,6 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 # the directory value Spark writes for a null partition column
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# the characters Spark %XX-escapes in a partition directory value
+_HIVE_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?[\\]^{\x7f"))
 
 
 class CheckpointStore:
@@ -237,3 +240,13 @@ def _partition_value(rel: str, col: str) -> str | None:
         if key == col:
             return None if value == _HIVE_NULL else unquote(value)
     raise ValueError(f"no {col}= directory in {rel}")
+
+
+def partition_dir(col: str, value: str | None) -> str:
+    """The directory `col=<value>` Spark writes for partition value
+    `value`, escaped the way Spark escapes it (the inverse of
+    `_partition_value`)."""
+    if not value:
+        return f"{col}={_HIVE_NULL}"
+    return col + "=" + "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED
+                               else ch for ch in value)

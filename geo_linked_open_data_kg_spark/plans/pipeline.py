@@ -34,6 +34,11 @@ from geo_linked_open_data_kg_spark.plans.checkpoint import CheckpointStore
 from geo_linked_open_data_kg_spark.sources.registry import load
 
 TRIPLE_COLS = ["subj", "pred", "obj", "confidence", "evidence"]
+# the edges table as read back: `edge_table`'s columns, with its
+# partition columns pred and cell last
+EDGES_SCHEMA = ("subj string, obj string, confidence double,"
+                " evidence string, s_lat double, s_lon double,"
+                " pred string, cell int")
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -167,46 +172,50 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
             ("cc_rounds_run", cc_stats.get("rounds_run", -1)),
             ("cc_converged", int(cc_stats.get("converged", False)))])
 
-    def _edges() -> DataFrame:
-        # north rule: node/edge tables "partitioned by H3 cell and
-        # predicate". The edge's layout cell is its SUBJECT's coarse
-        # grid box (functions/geo.coarse_cell): spatial queries prune
-        # to (pred, cell) partitions; person/org-subject edges (no
-        # coordinate) land in cell = -1. The subj->cell dim is keyed,
-        # deduped and tiny relative to the edge table (nodes vs
-        # triples), so this is one equi-join Catalyst broadcasts here
-        # and would shuffle-hash at cluster scale; the explicit
-        # repartition on the partition spec keeps the write at one
-        # file per (pred, cell) dir instead of one per task per dir.
-        # cell from the subject's CANONICAL coordinate (lexicographic
-        # struct-min over its rows) — the same representative the
-        # serving read path refines against (operators/serving.py), so
-        # layout partition and serving coordinate can never disagree
-        # for an id with several coordinate rows (min over cells and
-        # min over coordinates need not name the same row)
-        subj_cells = (nodes
-                      .where(F.col("latitude").isNotNull())
-                      .groupBy(F.col("id").alias("subj"))
-                      .agg(F.min(F.struct("latitude", "longitude"))
-                           .alias("c"))
-                      .select("subj",
-                              coarse_cell(F.col("c.latitude"),
-                                          F.col("c.longitude"))
-                              .alias("cell")))
-        return (canon.join(subj_cells, "subj", "left")
-                .withColumn("cell", F.coalesce(F.col("cell"), F.lit(-1)))
-                # an explicit count: AQE coalesces a count-less
-                # repartition of this small input into ONE write task;
-                # each (pred, cell) still hashes to a single task
-                .repartition(n_part, "pred", "cell")
-                .select(*TRIPLE_COLS, "cell"))
-
     edges = ckpt.get_or_compute(
-        spark, "edges", _edges, partition_by=["pred", "cell"], force=force)
+        spark, "edges", lambda: edge_table(canon, nodes, n_part),
+        partition_by=["pred", "cell"], force=force)
 
     return {"linked_mentions": linked, "mention_triples": mention_t,
             "gazetteer_triples": gaz_triples, "canonical_triples": canon,
             "nodes": nodes, "edges": edges}
+
+
+def edge_table(triples: DataFrame, nodes: DataFrame, n_part: int
+               ) -> DataFrame:
+    """The edges stage: `triples` with their subject's coordinate
+    (`s_lat`, `s_lon`) and layout `cell`, to be written
+    `partitionBy("pred", "cell")`.
+
+    North rule: node/edge tables "partitioned by H3 cell and predicate".
+    An edge's cell is its subject's coarse grid box
+    (functions/geo.coarse_cell), so spatial reads prune to (pred, cell)
+    directories and refine on `s_lat`/`s_lon` without reading nodes. A
+    subject with several coordinate rows takes their lexicographic
+    struct-min; a subject with none (persons, orgs) gets null
+    coordinates and cell -1. The subject dim is keyed, deduped and tiny
+    relative to the edge table (nodes vs triples), so this is one
+    equi-join Catalyst broadcasts here and would shuffle-hash at cluster
+    scale; the explicit repartition on the partition spec keeps the
+    write at one file per (pred, cell) dir instead of one per task per
+    dir."""
+    subj_coords = (nodes
+                   .where(F.col("latitude").isNotNull())
+                   .groupBy(F.col("id").alias("subj"))
+                   .agg(F.min(F.struct("latitude", "longitude")).alias("c"))
+                   # cell here, not after the left join: coarse_cell of
+                   # a null coordinate is a real cell (least() skips nulls)
+                   .select("subj", F.col("c.latitude").alias("s_lat"),
+                           F.col("c.longitude").alias("s_lon"),
+                           coarse_cell(F.col("c.latitude"),
+                                       F.col("c.longitude")).alias("cell")))
+    return (triples.join(subj_coords, "subj", "left")
+            .withColumn("cell", F.coalesce(F.col("cell"), F.lit(-1)))
+            # an explicit count: AQE coalesces a count-less repartition
+            # of this small input into ONE write task; each (pred, cell)
+            # still hashes to a single task
+            .repartition(n_part, "pred", "cell")
+            .select(*TRIPLE_COLS, "s_lat", "s_lon", "cell"))
 
 
 def build_nodes(places: DataFrame, wd: DataFrame, persons: DataFrame,

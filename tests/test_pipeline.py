@@ -7,8 +7,13 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from geo_linked_open_data_kg_spark.plans.pipeline import run_pipeline
+from geo_linked_open_data_kg_spark.plans.pipeline import (
+    EDGES_SCHEMA,
+    edge_table,
+    run_pipeline,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 STAGES = ["linked_mentions", "mention_triples", "gazetteer_triples", "nodes",
@@ -64,6 +69,18 @@ def test_pipeline_end_to_end(spark, out_dir):
                        & (F.col("cell") >= 0)).count() > 0
     assert edges.where((F.col("pred") == "bornIn")
                        & (F.col("cell") == -1)).count() > 0
+    # every edge carries its subject's struct-min coordinate, null
+    # exactly in cell -1
+    assert edges.schema.simpleString() == \
+        StructType.fromDDL(EDGES_SCHEMA).simpleString()
+    canon_coords = (res["nodes"].where(F.col("latitude").isNotNull())
+                    .groupBy(F.col("id").alias("subj"))
+                    .agg(F.min(F.struct("latitude", "longitude")).alias("c")))
+    bad = (edges.join(canon_coords, "subj", "left")
+           .where(~(F.col("s_lat").eqNullSafe(F.col("c.latitude"))
+                    & F.col("s_lon").eqNullSafe(F.col("c.longitude"))
+                    & (F.col("s_lat").isNull() == (F.col("cell") == -1)))))
+    assert bad.count() == 0, bad.limit(5).collect()
 
 
 def test_pipeline_resume_skips_completed_stages(spark, out_dir):
@@ -113,6 +130,7 @@ def test_commit_runs_only_the_write_job(spark, tmp_path):
     merge_upsert shadow write records the real stage label."""
     from geo_linked_open_data_kg_spark.plans.checkpoint import (
         CheckpointStore,
+        partition_dir,
     )
     store = CheckpointStore(str(tmp_path))
     sc = spark.sparkContext
@@ -141,6 +159,11 @@ def test_commit_runs_only_the_write_job(spark, tmp_path):
     assert rows == {"n_rows": 5, "n_triples:has:colon": 2,
                     "n_triples:has space": 1, "n_triples:a/b=c%": 1,
                     None: 1}
+    # partition_dir names the directories Spark wrote
+    import os
+    assert {partition_dir("pred", p) for p in
+            ("has:colon", "has space", "a/b=c%", None)} == \
+        {d for d in os.listdir(f"{tmp_path}/by_pred") if d.startswith("pred=")}
 
     store.merge_upsert(df, "merged", keys=["id"])
     store.merge_upsert(df.limit(3), "merged", keys=["id"])
@@ -210,9 +233,15 @@ def test_merge_upsert_incremental_document_update(spark):
 
 def test_nearby_edges_serving_is_partition_pruned_and_exact(spark, out_dir):
     """The (pred, cell) layout's payoff: a point-radius serving query
-    scans only the pruned partition dirs (PartitionFilters on pred AND
-    cell) yet returns exactly the full-scan answer."""
-    from geo_linked_open_data_kg_spark.functions.geo import haversine_km
+    opens only the cover's partition dirs, in at most two Spark jobs,
+    yet returns exactly the full-scan answer."""
+    import os
+    from urllib.parse import urlparse
+
+    from geo_linked_open_data_kg_spark.functions.geo import (
+        coarse_cells_covering,
+        haversine_km,
+    )
     from geo_linked_open_data_kg_spark.operators.serving import (
         nearby_edges,
     )
@@ -222,10 +251,19 @@ def test_nearby_edges_serving_is_partition_pruned_and_exact(spark, out_dir):
          .orderBy("id").first())
     qlat, qlon = float(p["latitude"]), float(p["longitude"])
 
-    res = nearby_edges(spark, out_dir, "nearTo", qlat, qlon, 50.0)
-    got = {(r["subj"], r["obj"], r["dist_km"]) for r in res.collect()}
+    sc = spark.sparkContext
+    group = "test-nearby-read"
+    sc.setJobGroup(group, "one nearby read")
+    try:
+        res = nearby_edges(spark, out_dir, "nearTo", qlat, qlon, 50.0)
+        rows = res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 1 <= n_jobs <= 2, n_jobs
+    got = {(r["subj"], r["obj"], r["dist_km"]) for r in rows}
 
-    # brute reference: full edge scan, same canonical-coordinate refine
+    # brute reference: full edge scan, subject coordinates from nodes
     coords = (nodes.where(F.col("latitude").isNotNull())
               .groupBy(F.col("id").alias("subj"))
               .agg(F.min(F.struct("latitude", "longitude")).alias("c"))
@@ -243,12 +281,14 @@ def test_nearby_edges_serving_is_partition_pruned_and_exact(spark, out_dir):
     assert got == want
     assert got, "serving query found nothing near a dense place"
 
-    # pruning evidence: the edge scan carries PartitionFilters on both
-    # layout keys (directory pruning, not post-scan filtering)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [ln for ln in plan.splitlines()
-                  if "PartitionFilters" in ln]
-    assert any("cell" in ln and "pred" in ln for ln in scan_lines), plan
+    # pruning evidence: every file the read opens lies in a
+    # pred=nearTo/cell=<c> dir of the query's cover
+    cover = {os.path.join(out_dir, "edges", "pred=nearTo", f"cell={c}")
+             for c in coarse_cells_covering(qlat, qlon, 50.0)}
+    files = res.inputFiles()
+    assert files
+    for f in files:
+        assert os.path.dirname(urlparse(f).path) in cover, f
 
 
 def test_coarse_cells_covering_matches_column_twin(spark):
@@ -274,7 +314,8 @@ def test_coarse_cells_covering_matches_column_twin(spark):
 def test_ego_edges_matches_python_bfs(spark, out_dir):
     """k-hop ego graph == reference BFS over the collected edge list,
     including first-reached hop attribution, starting from the
-    highest-degree node (stresses the per-hop dedup)."""
+    highest-degree node (stresses the per-hop dedup), restricted to
+    some predicates, and from a node with no edges."""
     from collections import defaultdict
 
     from geo_linked_open_data_kg_spark.operators.serving import ego_edges
@@ -282,70 +323,119 @@ def test_ego_edges_matches_python_bfs(spark, out_dir):
     triples = [(r["subj"], r["pred"], r["obj"]) for r in
                spark.read.parquet(f"{out_dir}/edges")
                .select("subj", "pred", "obj").collect()]
-    adj = defaultdict(set)
-    for s, p, o in triples:
-        adj[s].add((s, p, o))
-        adj[o].add((s, p, o))
-    start = max(adj, key=lambda n: len(adj[n]))
 
-    got = {(r["subj"], r["pred"], r["obj"], r["hop"]) for r in
-           ego_edges(spark, out_dir, [start], k=2).collect()}
+    def bfs(start, preds=None):
+        adj = defaultdict(set)
+        for s, p, o in triples:
+            if preds is None or p in preds:
+                adj[s].add((s, p, o))
+                adj[o].add((s, p, o))
+        seen_nodes, frontier = {start}, {start}
+        edge_hop: dict[tuple, int] = {}
+        for hop in (1, 2):
+            hit = {e for n in frontier for e in adj[n]}
+            for e in hit:
+                edge_hop.setdefault(e, hop)
+            nodes = {x for e in hit for x in (e[0], e[2])}
+            frontier = nodes - seen_nodes
+            seen_nodes |= nodes
+        return {(s, p, o, h) for (s, p, o), h in edge_hop.items()}
 
-    seen_nodes, frontier = {start}, {start}
-    edge_hop: dict[tuple, int] = {}
-    for hop in (1, 2):
-        hit = {e for n in frontier for e in adj[n]}
-        for e in hit:
-            edge_hop.setdefault(e, hop)
-        nodes = {x for e in hit for x in (e[0], e[2])}
-        frontier = nodes - seen_nodes
-        seen_nodes |= nodes
-    want = {(s, p, o, h) for (s, p, o), h in edge_hop.items()}
-    assert got == want
-    assert got, "ego graph of the hub node is empty"
+    def hub(preds=None):
+        degree = defaultdict(int)
+        for s, p, o in triples:
+            if preds is None or p in preds:
+                degree[s] += 1
+                degree[o] += 1
+        return max(degree, key=degree.get)
+
+    preds = ["nearTo", "partOf"]
+    # the restriction bites: the unrestricted ego graph is larger
+    assert bfs(hub(preds), preds) < bfs(hub(preds))
+    for start, ps in ((hub(), None), (hub(preds), preds),
+                      ("no-such-node", None)):
+        res = ego_edges(spark, out_dir, [start], k=2, preds=ps)
+        assert res.schema.simpleString() == (
+            "struct<subj:string,pred:string,obj:string,confidence:double,"
+            "evidence:string,hop:int>")
+        rows = res.collect()
+        got = {(r["subj"], r["pred"], r["obj"], r["hop"]) for r in rows}
+        assert len(got) == len(rows), (start, ps)
+        assert got == bfs(start, ps), (start, ps)
+        assert bool(got) == (start != "no-such-node"), (start, ps)
 
 
-def test_nearby_edges_antimeridian_and_polar(spark):
-    """Functional coverage for the serving bbox's two hard branches: the
-    antimeridian two-window wrap and the pole-crossing full-ring case
-    (the clamped planar window used to drop the polar subject)."""
-    import shutil
-    import tempfile
-
-    from geo_linked_open_data_kg_spark.functions.geo import coarse_cell
-    from geo_linked_open_data_kg_spark.operators.serving import (
-        nearby_edges,
-    )
-
+@pytest.fixture(scope="module")
+def golden_graph(spark):
+    """A four-subject graph around the antimeridian and the south pole,
+    its edges laid out by the pipeline's own `edge_table`."""
     nodes = spark.createDataFrame(
         [("east", 10.0, 179.9), ("west", 10.0, -179.9),
          ("far", 10.0, 170.0), ("polar", -89.7, 150.0)],
         "id string, latitude double, longitude double")
-    edges = (spark.createDataFrame(
+    triples = (spark.createDataFrame(
         [("east", "nearTo", "o1"), ("west", "nearTo", "o2"),
          ("far", "nearTo", "o3"), ("polar", "nearTo", "o4")],
         "subj string, pred string, obj string")
         .withColumn("confidence", F.lit(1.0))
         .withColumn("evidence", F.lit("golden")))
-    cells = (nodes.select(F.col("id").alias("subj"),
-                          coarse_cell(F.col("latitude"),
-                                      F.col("longitude")).alias("cell")))
     d = tempfile.mkdtemp(prefix="kg_serve_golden_")
-    try:
-        nodes.write.parquet(f"{d}/nodes")
-        (edges.join(cells, "subj")
-         .write.partitionBy("pred", "cell").parquet(f"{d}/edges"))
+    (edge_table(triples, nodes, 2)
+     .write.partitionBy("pred", "cell").parquet(f"{d}/edges"))
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
 
-        # query 0.05 deg east of the antimeridian: both straddling
-        # nodes are within ~17 km, the 170-deg node is ~1000 km out
-        got = {r["subj"] for r in nearby_edges(
-            spark, d, "nearTo", 10.0, 179.95, 50.0).collect()}
-        assert got == {"east", "west"}
 
-        # pole-crossing disc: the subject sits 150 deg of longitude away
-        # but only ~54 km over the pole — the full-ring branch must keep it
-        got = {r["subj"] for r in nearby_edges(
-            spark, d, "nearTo", -89.8, 0.0, 100.0).collect()}
-        assert got == {"polar"}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+def test_nearby_edges_antimeridian_and_polar(spark, golden_graph):
+    """Functional coverage for the serving bbox's two hard branches: the
+    antimeridian two-window wrap and the pole-crossing full-ring case
+    (the clamped planar window used to drop the polar subject)."""
+    from geo_linked_open_data_kg_spark.operators.serving import (
+        nearby_edges,
+    )
+
+    # query 0.05 deg east of the antimeridian: both straddling
+    # nodes are within ~17 km, the 170-deg node is ~1000 km out
+    got = {r["subj"] for r in nearby_edges(
+        spark, golden_graph, "nearTo", 10.0, 179.95, 50.0).collect()}
+    assert got == {"east", "west"}
+
+    # pole-crossing disc: the subject sits 150 deg of longitude away
+    # but only ~54 km over the pole — the full-ring branch must keep it
+    got = {r["subj"] for r in nearby_edges(
+        spark, golden_graph, "nearTo", -89.8, 0.0, 100.0).collect()}
+    assert got == {"polar"}
+
+
+def test_nearby_edges_empty_cover(spark, golden_graph):
+    """A disc whose cover holds no partition dir of the predicate, or a
+    predicate the graph lacks, reads nothing and returns an empty frame
+    with the output schema."""
+    from geo_linked_open_data_kg_spark.operators.serving import (
+        nearby_edges,
+    )
+
+    for pred, lat, lon in (("nearTo", 45.0, 60.0),
+                           ("bornIn", 10.0, 179.95),
+                           ("has:colon", 10.0, 179.95)):
+        res = nearby_edges(spark, golden_graph, pred, lat, lon, 50.0)
+        assert res.schema.simpleString() == (
+            "struct<subj:string,pred:string,obj:string,confidence:double,"
+            "evidence:string,dist_km:double>")
+        assert res.collect() == []
+
+
+def test_nearby_edges_refuses_edges_without_subject_coords(
+        spark, golden_graph, tmp_path):
+    """An edges table written before edges stored their subject
+    coordinate raises, naming the missing columns, instead of returning
+    an empty result."""
+    from geo_linked_open_data_kg_spark.operators.serving import (
+        nearby_edges,
+    )
+
+    old = str(tmp_path / "old")
+    (spark.read.parquet(f"{golden_graph}/edges").drop("s_lat", "s_lon")
+     .write.partitionBy("pred", "cell").parquet(f"{old}/edges"))
+    with pytest.raises(ValueError, match="s_lat, s_lon.*edges stage"):
+        nearby_edges(spark, old, "nearTo", 10.0, 179.95, 50.0)
