@@ -17,35 +17,19 @@ convergence is 2-4 rounds; the checkpoint bounds plan growth at scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Lazy per-round checkpoints by default: the convergence check's
-# count() (or the next round's join) materializes each round's labels
-# as part of a job that runs anyway, instead of eager=True's dedicated
-# materialization job per round. Interleaved 3x(1 cold + 4 warm) A/B on
-# kg_same_as_components sf0.1 (BENCH.md): warm median 4.01 -> 3.08 s
-# (-23%), lazy faster in every paired rep, identical output. Pure
-# job-count savings — the win grows when per-job scheduler latency is
-# elevated (this host swings it 2-3x across sessions). Knob kept for
-# re-measurement.
-_CC_EAGER = os.environ.get("SPARK_GRAFT_CC_EAGER", "0") == "1"
-
-# stats of the most recent connected_components run in this process:
-# {"rounds_run": int, "converged": bool}. The pipeline copies them into
-# the stage _metrics table — max_iter must never truncate SILENTLY
-# (round-4 VERDICT item 6: "no silent caps" applies to iteration caps
-# too, now that duplicate_groups feeds CC less-bounded-diameter graphs).
-LAST_CC_STATS: dict = {}
 
 
 def connected_components(edges: DataFrame, src: str = "subj",
                          dst: str = "obj", max_iter: int = 25,
-                         strict: bool = True) -> DataFrame:
-    """(node, component) with component = lexicographic min node id
-    reachable in the undirected graph.
+                         strict: bool = True) -> tuple[DataFrame, dict]:
+    """(labels, stats): labels is (node, component) with component =
+    lexicographic min node id reachable in the undirected graph; stats
+    is {"rounds_run": int, "converged": bool}, which callers copy into
+    their stage _metrics — max_iter must never truncate SILENTLY
+    (round-4 VERDICT item 6: "no silent caps" applies to iteration caps
+    too).
 
     Min-label propagation converges in O(diameter) rounds — fine for
     linking components (stars/chains, 2-4 rounds). For deeper graphs
@@ -54,18 +38,25 @@ def connected_components(edges: DataFrame, src: str = "subj",
     path-halving idea) kicks in after round 3, making convergence
     O(log diameter) without taxing the common shallow case. If the
     graph still hasn't converged at max_iter, raise (strict=True) —
-    never silently return partial components; strict=False records
-    converged=False in LAST_CC_STATS instead for callers that audit."""
+    never silently return partial components; strict=False reports
+    converged=False in stats instead for callers that audit.
+
+    Per-round checkpoints are lazy: the convergence check's count() (or
+    the next round's join) materializes each round's labels inside a
+    job that runs anyway, instead of a dedicated materialization job per
+    round. Interleaved 3x(1 cold + 4 warm) A/B on kg_same_as_components
+    sf0.1 (BENCH.md): warm median 4.01 -> 3.08 s against eager
+    checkpoints, identical output."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = (e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
            .where(F.col("a") != F.col("b"))
            .distinct()
-           .localCheckpoint(eager=_CC_EAGER))
+           .localCheckpoint(eager=False))
 
     labels = (sym.select(F.col("a").alias("node"))
               .distinct()
               .withColumn("component", F.col("node"))
-              .localCheckpoint(eager=_CC_EAGER))
+              .localCheckpoint(eager=False))
 
     converged = False
     rounds_run = 0
@@ -90,7 +81,7 @@ def connected_components(edges: DataFrame, src: str = "subj",
                           .select("node",
                                   F.coalesce("c_comp", "component")
                                   .alias("component")))
-        new_labels = new_labels.localCheckpoint(eager=_CC_EAGER)
+        new_labels = new_labels.localCheckpoint(eager=False)
         old = labels
         labels = new_labels
         rounds_run = it + 1
@@ -106,20 +97,20 @@ def connected_components(edges: DataFrame, src: str = "subj",
         if changed == 0:
             converged = True
             break
-    LAST_CC_STATS.clear()
-    LAST_CC_STATS.update({"rounds_run": rounds_run, "converged": converged})
     if strict and not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(graph diameter exceeds the iteration budget); raise "
-            "max_iter or pass strict=False to audit via LAST_CC_STATS")
-    return labels
+            "max_iter or pass strict=False to audit via the returned stats")
+    return labels, {"rounds_run": rounds_run, "converged": converged}
 
 
-def canonical_mapping(same_as: DataFrame) -> DataFrame:
-    """(node, canonical) for every node touched by a sameAs edge."""
-    return (connected_components(same_as)
-            .select("node", F.col("component").alias("canonical")))
+def canonical_mapping(same_as: DataFrame) -> tuple[DataFrame, dict]:
+    """((node, canonical) for every node touched by a sameAs edge, the
+    connected_components stats)."""
+    labels, stats = connected_components(same_as)
+    return (labels.select("node", F.col("component").alias("canonical")),
+            stats)
 
 
 def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -369,7 +369,7 @@ def embedding_near_dups(embeddings: DataFrame, hyperplanes: DataFrame,
             .select("id_a", "id_b", "cos"))
 
 
-def duplicate_groups(documents: DataFrame) -> DataFrame:
+def duplicate_groups(documents: DataFrame) -> tuple[DataFrame, dict]:
     """Near-duplicate GROUPS with keeper selection — the deliverable a
     corpus dedup actually ships (the pair lists are intermediates; at
     100 TB nobody consumes pairs). Union of the three near-dup pair
@@ -381,10 +381,11 @@ def duplicate_groups(documents: DataFrame) -> DataFrame:
     MERGE-key dedup + duplicate accounting
     (scripts/loaders/load_post_offices.py:76-100).
 
-    Output: (group_id, doc_id, is_keeper, n_members); group_id = min
-    member doc_id. Scale shape: pair generation is bucketed (never
-    all-pairs), CC shuffles only the pair graph (tiny vs the corpus),
-    keeper selection is one window over group-partitioned members.
+    Output: ((group_id, doc_id, is_keeper, n_members), the CC stats
+    {"rounds_run", "converged"}); group_id = min member doc_id. Scale
+    shape: pair generation is bucketed (never all-pairs), CC shuffles
+    only the pair graph (tiny vs the corpus), keeper selection is one
+    window over group-partitioned members.
 
     Corpus passes (round-4 VERDICT item 4): ONE shared tokenize scan
     (localCheckpointed) feeds simhash and the shared shingle stream
@@ -409,7 +410,7 @@ def duplicate_groups(documents: DataFrame) -> DataFrame:
              .unionByName(
                  ngram_jaccard_pairs(documents, sh=sh)
                  .select("doc_a", "doc_b")))
-    cc = connected_components(pairs, src="doc_a", dst="doc_b")
+    cc, cc_stats = connected_components(pairs, src="doc_a", dst="doc_b")
     q = quality_scores(documents).select("doc_id", "quality")
     members = (cc.select(F.col("component").alias("group_id"),
                          F.col("node").alias("doc_id"))
@@ -422,7 +423,8 @@ def duplicate_groups(documents: DataFrame) -> DataFrame:
             .withColumn("rn", F.row_number().over(kw))
             .select("group_id", "doc_id",
                     (F.col("rn") == 1).alias("is_keeper"),
-                    F.count("*").over(gw).alias("n_members")))
+                    F.count("*").over(gw).alias("n_members")),
+            cc_stats)
 
 
 def dedup_cap_metrics(documents: DataFrame, n_hashes: int = N_MINHASH,

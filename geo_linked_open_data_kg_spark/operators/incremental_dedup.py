@@ -125,7 +125,7 @@ def _groups_from_edges(edges: DataFrame, state: DataFrame) -> DataFrame:
     """CC over the pair graph, then keeper election per component from the
     state's stored quality: max quality, tie-break min doc_id — the same
     rule as the batch duplicate_groups (dedup.py:418-421)."""
-    cc = connected_components(edges, src="doc_a", dst="doc_b")
+    cc, _ = connected_components(edges, src="doc_a", dst="doc_b")
     members = (cc.select(F.col("component").alias("group_id"),
                          F.col("node").alias("doc_id"))
                .join(state.select("doc_id", "quality"), "doc_id", "left"))

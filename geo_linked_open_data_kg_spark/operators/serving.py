@@ -15,8 +15,12 @@ plans/pipeline.edge_table). So the layout is the index:
   are bbox-filtered and haversine-refined on their own `s_lat`/`s_lon`.
   The coarse grid has 288 cells, so a 100 km read opens 1-4 directories
   of one predicate whatever the corpus size.
-- `ego_edges` scans the edge table once per hop for the edges that touch
-  the frontier and expands on the driver; hop rows are ego-graph-sized.
+- `ego_edges` does not use that layout: it reads the one-directory
+  `canonical_triples` table, whose rows are the edges table's. Hops
+  1..k-1 collect only the node ids of the edges that touch the BFS
+  level; hop k is one lazy scan with the reached node set pushed in as
+  an `IN` predicate, so a k-hop read runs k Spark jobs and never lists
+  the (pred, cell) directories.
 """
 
 from __future__ import annotations
@@ -38,6 +42,7 @@ from geo_linked_open_data_kg_spark.plans.checkpoint import partition_dir
 from geo_linked_open_data_kg_spark.plans.pipeline import (
     EDGES_SCHEMA,
     TRIPLE_COLS,
+    TRIPLES_SCHEMA,
 )
 
 NEARBY_SCHEMA = ("subj string, pred string, obj string, confidence double,"
@@ -122,31 +127,51 @@ def ego_edges(spark: SparkSession, graph_dir: str, start_ids: list[str],
     Output: (subj, pred, obj, confidence, evidence, hop) where hop is
     the expansion round (1-based) that first reached the edge; each
     (subj, pred, obj) appears once. `preds` restricts the traversal to
-    those predicates (and prunes the scan to their directories).
+    those predicates. k < 1 gives the empty frame.
 
-    Each hop is one scan of the edge table for the edges with an
-    endpoint in the frontier, collected to the driver, which dedups
-    them and derives the next frontier. The collected rows are the ego
-    graph itself, never the corpus; a hub's blow-up is the caller's k
-    to manage, not a hidden cap (no silent caps).
+    Reads `<graph_dir>/canonical_triples`, one directory whose rows are
+    the edges table's, already unique on (subj, pred, obj); raises
+    ValueError if the graph has none. Hops 1..k-1 each collect the
+    (subj, obj) of the edges that touch the current BFS level, which
+    gives the node levels 0..k-1. Hop k is not collected: the result is
+    one lazy scan for the edges that touch any of those nodes, the
+    frontier pushed into the scan as an `IN` predicate ("Pushing
+    Data-Induced Predicates Through Joins in Big-Data Clusters", VLDB
+    2019), with hop = 1 + the lower level of its two endpoints. So a
+    read runs k Spark jobs and ships only node ids through the driver;
+    a hub's blow-up is the caller's k to manage, not a hidden cap (no
+    silent caps).
     """
-    edges = spark.read.schema(EDGES_SCHEMA).parquet(
-        os.path.join(graph_dir, "edges"))
+    path = os.path.join(graph_dir, "canonical_triples")
+    if not os.path.isdir(path):
+        raise ValueError(
+            f"graph {graph_dir} has no canonical_triples table ({path}):"
+            " ego reads need the pipeline's canonical_triples stage.")
+    if k < 1:
+        return spark.createDataFrame([], EGO_SCHEMA)
+    triples = spark.read.schema(TRIPLES_SCHEMA).parquet(path)
     if preds:
-        edges = edges.where(F.col("pred").isin(list(preds)))
-    edges = edges.select(*TRIPLE_COLS)
+        triples = triples.where(F.col("pred").isin(list(preds)))
 
-    seen_nodes = {str(s) for s in start_ids}
-    frontier = sorted(seen_nodes)
-    out: dict[tuple, tuple] = {}
-    for hop in range(1, k + 1):
-        if not frontier:
-            break
+    def touches(nodes: list[str]):
+        return F.col("subj").isin(nodes) | F.col("obj").isin(nodes)
+
+    levels = [sorted({str(s) for s in start_ids})]
+    seen = set(levels[0])
+    while len(levels) < k and levels[-1]:
         reached = set()
-        for r in edges.where(F.col("subj").isin(frontier)
-                             | F.col("obj").isin(frontier)).collect():
-            out.setdefault((r["subj"], r["pred"], r["obj"]), (*r, hop))
-            reached.update((r["subj"], r["obj"]))
-        frontier = sorted(reached - seen_nodes)
-        seen_nodes |= reached
-    return spark.createDataFrame(list(out.values()), EGO_SCHEMA)
+        for r in triples.where(touches(levels[-1])).select(
+                "subj", "obj").collect():
+            reached.update(r)
+        levels.append(sorted(reached - seen))
+        seen |= reached
+
+    def level(c: str):
+        lv = F.when(F.col(c).isin(levels[0]), 0)
+        for h, nodes in enumerate(levels[1:], 1):
+            lv = lv.when(F.col(c).isin(nodes), h)
+        return lv
+
+    hop = (F.least(level("subj"), level("obj")) + 1).cast("int")
+    return (triples.where(touches(sorted(seen)))
+            .select(*TRIPLE_COLS, hop.alias("hop")))

@@ -121,7 +121,7 @@ class CheckpointStore:
         `label` overrides the stage name recorded IN lineage/metrics rows
         (used by merge_upsert's shadow write). `extra_metrics` appends
         caller-supplied (metric, value) rows — e.g. the CC convergence
-        audit (canonicalize.LAST_CC_STATS)."""
+        audit (the stats canonicalize.connected_components returns)."""
         label = label or stage
         path = self.path(stage)
         w = df.write.mode("overwrite")

@@ -95,13 +95,12 @@ def run_curation_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
             .localCheckpoint(eager=False))
 
     # CC convergence audit, same contract as the KG pipeline's
-    # canonicalization stage: stats copied out immediately post-compute
+    # canonicalization stage: the stats duplicate_groups' CC returned
     cc_stats: dict = {}
 
     def _dup_groups() -> DataFrame:
-        from geo_linked_open_data_kg_spark.operators import canonicalize
-        out = duplicate_groups(kept)
-        cc_stats.update(canonicalize.LAST_CC_STATS)
+        out, stats = duplicate_groups(kept)
+        cc_stats.update(stats)
         return out
 
     dup_groups = ckpt.get_or_compute(

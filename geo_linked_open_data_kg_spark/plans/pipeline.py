@@ -34,6 +34,9 @@ from geo_linked_open_data_kg_spark.plans.checkpoint import CheckpointStore
 from geo_linked_open_data_kg_spark.sources.registry import load
 
 TRIPLE_COLS = ["subj", "pred", "obj", "confidence", "evidence"]
+# the canonical_triples table as read back: `rewrite_triples`' columns
+TRIPLES_SCHEMA = ("subj string, pred string, obj string, confidence double,"
+                  " evidence string")
 # the edges table as read back: `edge_table`'s columns, with its
 # partition columns pred and cell last
 EDGES_SCHEMA = ("subj string, obj string, confidence double,"
@@ -150,18 +153,14 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         gaz_triples = f_gaz.result()
         nodes = f_nodes.result()
 
-    from geo_linked_open_data_kg_spark.operators import canonicalize
-
-    # CC convergence audit (no silent iteration caps): stats are copied
-    # out of canonicalize.LAST_CC_STATS IMMEDIATELY after the CC call —
-    # not at metrics-write time — so a later CC invocation in the same
-    # process can never masquerade as this stage's run
+    # CC convergence audit (no silent iteration caps): the stats this
+    # stage's own CC run returned, read by extra_metrics_fn after compute
     cc_stats: dict = {}
 
     def _canon_compute() -> DataFrame:
-        mapping = canonical_mapping(
+        mapping, stats = canonical_mapping(
             gaz_triples.where(F.col("pred") == "sameAs"))
-        cc_stats.update(canonicalize.LAST_CC_STATS)
+        cc_stats.update(stats)
         return rewrite_triples(
             gaz_triples.unionByName(mention_t.select(*TRIPLE_COLS)),
             mapping)

@@ -765,7 +765,7 @@ def kg_same_as_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     links = direct_link.direct_id_links(
         load(spark, sf_dir, "wikidata_places"), load(spark, sf_dir, "places"))
-    return connected_components(links)
+    return connected_components(links)[0]
 
 
 # ------------------------------------------------------- aggregations ------
@@ -897,7 +897,7 @@ def kg_canonical_gazetteer_triples(spark: SparkSession,
            .unionByName(biography.died_in(persons, wd).select(*cols))
            .unionByName(biography.resided_in(persons, wd).select(*cols)))
     return rewrite_triples(
-        gaz, canonical_mapping(gaz.where(F.col("pred") == "sameAs")))
+        gaz, canonical_mapping(gaz.where(F.col("pred") == "sameAs"))[0])
 
 
 # ------------------------------------------------- more KG operators -------
@@ -1729,7 +1729,7 @@ def td_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geo_linked_open_data_kg_spark.operators.dedup import (
         duplicate_groups,
     )
-    return duplicate_groups(_aug_documents(spark, sf_dir))
+    return duplicate_groups(_aug_documents(spark, sf_dir))[0]
 
 
 ORACLES["td_dup_groups"] = _dup_groups_oracle()

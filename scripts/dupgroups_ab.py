@@ -48,7 +48,7 @@ def main() -> None:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def groups_from_pairs(pairs):
-        cc = connected_components(pairs, src="doc_a", dst="doc_b")
+        cc, _ = connected_components(pairs, src="doc_a", dst="doc_b")
         qs = quality_scores(docs).select("doc_id", "quality")
         members = (cc.select(F.col("component").alias("group_id"),
                              F.col("node").alias("doc_id"))
@@ -72,7 +72,7 @@ def main() -> None:
         return groups_from_pairs(pairs).count()
 
     def new_shape():
-        return dedup.duplicate_groups(docs).count()
+        return dedup.duplicate_groups(docs)[0].count()
 
     def release():
         spark.catalog.clearCache()
@@ -83,7 +83,7 @@ def main() -> None:
     shots = {"old": [], "new": []}
     counts = {}
     # warm-up (codegen/JIT) on a small slice
-    dedup.duplicate_groups(docs.limit(2000)).count()
+    dedup.duplicate_groups(docs.limit(2000))[0].count()
     release()
     for rnd in range(rounds):
         order = [("old", old_shape), ("new", new_shape)]

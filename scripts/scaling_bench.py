@@ -99,7 +99,7 @@ def run_once():
                         .select(*TRIPLE_COLS)))
     canon = rewrite_triples(
         gaz.unionByName(mt.select(*TRIPLE_COLS)),
-        canonical_mapping(gaz.where(F.col("pred") == "sameAs")))
+        canonical_mapping(gaz.where(F.col("pred") == "sameAs"))[0])
     n = canon.count()
     return time.time() - t0, n
 

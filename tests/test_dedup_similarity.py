@@ -151,8 +151,8 @@ def test_duplicate_groups_keeper_selection(spark):
             (4, body + " appended notes"),  # J=15/17 vs body: near-dup
             (10, "entirely unrelated short text about harbour tides"),
             (11, "another unrelated document concerning railway fares")]
-    got = {r["doc_id"]: r for r in duplicate_groups(_docs(spark, rows))
-           .collect()}
+    groups, _ = duplicate_groups(_docs(spark, rows))
+    got = {r["doc_id"]: r for r in groups.collect()}
     # docs 1-4 form one component (4 chains in via near-dup overlap)
     assert set(got) == {1, 2, 3, 4}, got
     assert {r["group_id"] for r in got.values()} == {1}

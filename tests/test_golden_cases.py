@@ -132,8 +132,8 @@ def test_connected_components_chain_and_star(spark):
         Row(subj="x", obj="hub"), Row(subj="y", obj="hub"),  # star
         Row(subj="z", obj="hub"),
     ])
-    cc = {r["node"]: r["component"]
-          for r in connected_components(edges).collect()}
+    labels, _ = connected_components(edges)
+    cc = {r["node"]: r["component"] for r in labels.collect()}
     assert cc["a"] == cc["b"] == cc["c"] == "a"
     assert cc["x"] == cc["y"] == cc["z"] == cc["hub"] == "hub"
 
@@ -143,19 +143,16 @@ def test_connected_components_deep_chain_converges(spark):
     VERDICT item 6): a 30-node chain (diameter 29) must converge WELL
     inside max_iter=25 — pointer jumping makes propagation O(log d)
     after round 3 — and the convergence audit must be queryable."""
-    from geo_linked_open_data_kg_spark.operators.canonicalize import (
-        LAST_CC_STATS,
-    )
     n = 30
     edges = spark.createDataFrame(
         [Row(subj=f"n{i:02d}", obj=f"n{i + 1:02d}") for i in range(n - 1)])
-    cc = {r["node"]: r["component"]
-          for r in connected_components(edges).collect()}
+    labels, stats = connected_components(edges)
+    cc = {r["node"]: r["component"] for r in labels.collect()}
     assert set(cc.values()) == {"n00"}, "one component labeled by min node"
-    assert LAST_CC_STATS["converged"] is True
+    assert stats["converged"] is True
     # plain min-label propagation would need ~29 rounds (> max_iter);
     # pointer jumping must finish far earlier
-    assert LAST_CC_STATS["rounds_run"] <= 12, LAST_CC_STATS
+    assert stats["rounds_run"] <= 12, stats
 
 
 def test_connected_components_truncation_fails_loudly(spark):
@@ -164,16 +161,12 @@ def test_connected_components_truncation_fails_loudly(spark):
     components (no silent caps applies to iteration caps too)."""
     import pytest
 
-    from geo_linked_open_data_kg_spark.operators.canonicalize import (
-        LAST_CC_STATS,
-    )
     edges = spark.createDataFrame(
         [Row(subj=f"n{i:02d}", obj=f"n{i + 1:02d}") for i in range(19)])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iter=2)
-    out = connected_components(edges, max_iter=2, strict=False)
-    assert LAST_CC_STATS["converged"] is False
-    assert LAST_CC_STATS["rounds_run"] == 2
+    out, stats = connected_components(edges, max_iter=2, strict=False)
+    assert stats == {"rounds_run": 2, "converged": False}
     assert out.count() == 20  # partial labels still returned for audit
 
 

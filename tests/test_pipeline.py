@@ -312,11 +312,18 @@ def test_coarse_cells_covering_matches_column_twin(spark):
 
 
 def test_ego_edges_matches_python_bfs(spark, out_dir):
-    """k-hop ego graph == reference BFS over the collected edge list,
-    including first-reached hop attribution, starting from the
-    highest-degree node (stresses the per-hop dedup), restricted to
-    some predicates, and from a node with no edges."""
+    """k-hop ego graph == reference BFS over the collected edges table
+    (so it also checks that canonical_triples, which ego_edges reads,
+    holds the edges table's rows), including first-reached hop
+    attribution, for k = 1, 2 and 3: from the highest-degree node
+    (stresses the per-hop dedup), restricted to some predicates, and
+    from a node with no edges. Each read runs at most k Spark jobs and
+    opens only files of the one-directory canonical_triples table, so
+    the (pred, cell) edge dirs are never listed. k = 0 gives the empty
+    frame."""
+    import os
     from collections import defaultdict
+    from urllib.parse import urlparse
 
     from geo_linked_open_data_kg_spark.operators.serving import ego_edges
 
@@ -324,7 +331,7 @@ def test_ego_edges_matches_python_bfs(spark, out_dir):
                spark.read.parquet(f"{out_dir}/edges")
                .select("subj", "pred", "obj").collect()]
 
-    def bfs(start, preds=None):
+    def bfs(start, k, preds=None):
         adj = defaultdict(set)
         for s, p, o in triples:
             if preds is None or p in preds:
@@ -332,7 +339,7 @@ def test_ego_edges_matches_python_bfs(spark, out_dir):
                 adj[o].add((s, p, o))
         seen_nodes, frontier = {start}, {start}
         edge_hop: dict[tuple, int] = {}
-        for hop in (1, 2):
+        for hop in range(1, k + 1):
             hit = {e for n in frontier for e in adj[n]}
             for e in hit:
                 edge_hop.setdefault(e, hop)
@@ -349,20 +356,39 @@ def test_ego_edges_matches_python_bfs(spark, out_dir):
                 degree[o] += 1
         return max(degree, key=degree.get)
 
+    schema = ("struct<subj:string,pred:string,obj:string,confidence:double,"
+              "evidence:string,hop:int>")
     preds = ["nearTo", "partOf"]
     # the restriction bites: the unrestricted ego graph is larger
-    assert bfs(hub(preds), preds) < bfs(hub(preds))
-    for start, ps in ((hub(), None), (hub(preds), preds),
-                      ("no-such-node", None)):
-        res = ego_edges(spark, out_dir, [start], k=2, preds=ps)
-        assert res.schema.simpleString() == (
-            "struct<subj:string,pred:string,obj:string,confidence:double,"
-            "evidence:string,hop:int>")
-        rows = res.collect()
-        got = {(r["subj"], r["pred"], r["obj"], r["hop"]) for r in rows}
-        assert len(got) == len(rows), (start, ps)
-        assert got == bfs(start, ps), (start, ps)
-        assert bool(got) == (start != "no-such-node"), (start, ps)
+    assert bfs(hub(preds), 2, preds) < bfs(hub(preds), 2)
+    # each k reaches further than the one before
+    assert bfs(hub(), 1) < bfs(hub(), 2) < bfs(hub(), 3)
+    root = os.path.join(out_dir, "canonical_triples")
+    sc = spark.sparkContext
+    for k in (1, 2, 3):
+        for start, ps in ((hub(), None), (hub(preds), preds),
+                          ("no-such-node", None)):
+            group = f"test-ego-read-{k}-{start}-{ps}"
+            sc.setJobGroup(group, "one ego read")
+            try:
+                res = ego_edges(spark, out_dir, [start], k=k, preds=ps)
+                rows = res.collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert 1 <= n_jobs <= k, (start, ps, k, n_jobs)
+            assert res.schema.simpleString() == schema
+            files = res.inputFiles()
+            assert files
+            for f in files:
+                assert os.path.dirname(urlparse(f).path) == root, f
+            got = {(r["subj"], r["pred"], r["obj"], r["hop"]) for r in rows}
+            assert len(got) == len(rows), (start, ps, k)
+            assert got == bfs(start, k, ps), (start, ps, k)
+            assert bool(got) == (start != "no-such-node"), (start, ps, k)
+    res = ego_edges(spark, out_dir, [hub()], k=0)
+    assert res.schema.simpleString() == schema
+    assert res.collect() == []
 
 
 @pytest.fixture(scope="module")
@@ -439,3 +465,13 @@ def test_nearby_edges_refuses_edges_without_subject_coords(
      .write.partitionBy("pred", "cell").parquet(f"{old}/edges"))
     with pytest.raises(ValueError, match="s_lat, s_lon.*edges stage"):
         nearby_edges(spark, old, "nearTo", 10.0, 179.95, 50.0)
+
+
+def test_ego_edges_refuses_graph_without_canonical_triples(
+        spark, golden_graph):
+    """A graph directory that holds no canonical_triples table raises,
+    naming the table, instead of reading nothing."""
+    from geo_linked_open_data_kg_spark.operators.serving import ego_edges
+
+    with pytest.raises(ValueError, match="no canonical_triples table"):
+        ego_edges(spark, golden_graph, ["east"], k=2)

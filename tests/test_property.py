@@ -114,8 +114,8 @@ def test_connected_components_match_union_find(spark, edges):
     if not named:
         return
     df = spark.createDataFrame(named, "subj string, obj string")
-    got = {r["node"]: r["component"]
-           for r in connected_components(df).collect()}
+    labels, _ = connected_components(df)
+    got = {r["node"]: r["component"] for r in labels.collect()}
 
     uf = _UnionFind()
     for a, b in named:
