@@ -82,15 +82,11 @@ def located_in_country(places: DataFrame, country_qids: DataFrame | None = None)
                     F.lit("country_code").alias("evidence")))
 
 
-def admin_triples(places: DataFrame, max_level: int = 4) -> DataFrame:
-    """All admin-hierarchy triples in one pass (union of levels).
-
-    `max_level` bounds the deepest ADM level emitted (default 4, the
-    full reference hierarchy); max_level=3 reproduces the round-3 edge
-    set for the bench A/B's like-for-like comparison."""
-    parts = ([located_in_admin(places, lvl)
-              for lvl in range(1, max_level + 1)]
-             + [part_of(places, lvl) for lvl in range(2, max_level + 1)]
+def admin_triples(places: DataFrame) -> DataFrame:
+    """All admin-hierarchy triples (ADM1-ADM4, the full reference
+    hierarchy) in one pass (union of levels)."""
+    parts = ([located_in_admin(places, lvl) for lvl in range(1, 5)]
+             + [part_of(places, lvl) for lvl in range(2, 5)]
              + [located_in_country(places)])
     out = parts[0]
     for p in parts[1:]:

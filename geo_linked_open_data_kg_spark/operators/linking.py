@@ -151,7 +151,6 @@ def combined_gram_streams(documents: DataFrame,
 
 
 def scored_exact_candidates(documents: DataFrame, places: DataFrame,
-                            broadcast_aliases: bool = True,
                             cap: int = MAX_CANDIDATES_PER_OCC,
                             grams: DataFrame | None = None) -> DataFrame:
     """Fused stage 1+2 exact path: detection, longest-match containment,
@@ -319,7 +318,7 @@ def scored_exact_candidates(documents: DataFrame, places: DataFrame,
     # candidate fan-out + every scoring attribute attach in ONE broadcast
     # join against the capped alias map (which carries the place attrs) —
     # the join input is output-sized (surviving occurrences only)
-    amj = F.broadcast(am) if broadcast_aliases else am
+    amj = F.broadcast(am)
     out = (out.join(amj, out.gram_norm == amj.alias_norm, "inner")
            .withColumn("admin_hit",
                        F.array_contains(F.col("adm_ctx_keys"),
@@ -346,13 +345,14 @@ def scored_exact_candidates(documents: DataFrame, places: DataFrame,
 def fuzzy_candidates(grams: DataFrame, places: DataFrame,
                      exact_occs: DataFrame, max_dist: int = 1,
                      stop_surfaces: DataFrame | None = None,
-                     distinct_surfaces: DataFrame | None = None,
-                     max_seen: int = FUZZY_MAX_SEEN) -> DataFrame:
+                     distinct_surfaces: DataFrame | None = None
+                     ) -> DataFrame:
     """J8 fuzzy fallback under the reference's "<5 candidates" gate
     (reconcile.py:319-333).
 
-    Blocked equi-join on (token count, length in {L-1, L, L+1}) then
-    levenshtein refine — replaces the reference's per-mention APOC scan.
+    Blocked equi-join on (token count, length in {L-1, L, L+1}, first or
+    last char) then levenshtein refine — replaces the reference's
+    per-mention APOC scan.
     Confidence = 1 - dist/len (reconcile.py:102-104).
 
     `grams` is the shared capitalized gram stream (computed once in
@@ -373,11 +373,8 @@ def fuzzy_candidates(grams: DataFrame, places: DataFrame,
     seen_ids dedup (reconcile.py:288-297): a fuzzy hit whose gid is
     already exact-visible for the same surface is dropped, so a gid
     appears at most once per occurrence across branches.
-    Short grams (<=5 chars) additionally require a matching first char.
 
     Output adds `rank_offset` (int) for the caller's ranking step.
-    `max_seen=1` reproduces the round-3 zero-exact-only gate (used by
-    scripts/ab_bench.py to isolate the count-gate's marginal cost).
 
     `distinct_surfaces` (one `gram` column, e.g. surface_stats output)
     replaces the corpus-wide distinct with a vocabulary-level input; all
@@ -484,7 +481,7 @@ def fuzzy_candidates(grams: DataFrame, places: DataFrame,
         & (F.col("k_end") >= F.col("start") + F.col("n"))
         & ((F.col("k_end") - F.col("k_start") > F.col("n"))   # strictly longer
            | F.col("k_ctx")                                   # context token
-           | (F.col("rank_offset") >= max_seen)),             # >=5 seen
+           | (F.col("rank_offset") >= FUZZY_MAX_SEEN)),       # >=5 seen
         "left_anti")
     return occ_hits.select(
         *OCC_KEYS, F.col("gram").alias("mention_text"), "geoname_id",
@@ -513,10 +510,8 @@ def snapshot_stop_surfaces(documents: DataFrame, places: DataFrame,
 def link_mentions(documents: DataFrame, places: DataFrame,
                   k: int = 10, min_confidence: float = 0.5,
                   with_fuzzy: bool = True,
-                  broadcast_aliases: bool = True,
                   n_docs: int | None = None,
-                  stop_surfaces: DataFrame | None = None,
-                  fuzzy_max_seen: int = FUZZY_MAX_SEEN) -> DataFrame:
+                  stop_surfaces: DataFrame | None = None) -> DataFrame:
     """Full stage-1+2: detect, contextualize, score, fuzzy-fallback, rank.
 
     Output: (doc_id, span_offset, start, n, mention_text, geoname_id,
@@ -540,9 +535,7 @@ def link_mentions(documents: DataFrame, places: DataFrame,
     exact_grams = cap_grams = None
     if with_fuzzy:
         exact_grams, cap_grams = combined_gram_streams(documents, places)
-    exact_all = scored_exact_candidates(documents, places,
-                                        broadcast_aliases=broadcast_aliases,
-                                        grams=exact_grams)
+    exact_all = scored_exact_candidates(documents, places, grams=exact_grams)
     strategies = (exact_all.where(~F.col("is_ctx_occ"))
                   .select(*OCC_KEYS, "mention_text", "geoname_id",
                           "strategy", "confidence", "population"))
@@ -605,8 +598,7 @@ def link_mentions(documents: DataFrame, places: DataFrame,
         fz = (fuzzy_candidates(grams, places,
                                exact_all.select(*OCC_KEYS, "is_ctx_occ"),
                                stop_surfaces=stop,
-                               distinct_surfaces=surf,
-                               max_seen=fuzzy_max_seen)
+                               distinct_surfaces=surf)
               .join(F.broadcast(places.select("geoname_id", "population")),
                     "geoname_id")
               .select(*OCC_KEYS, "mention_text", "geoname_id", "strategy",

@@ -193,7 +193,6 @@ def capitalized_ngram_candidates(spans: DataFrame,
 
 
 def detect_mentions(documents: DataFrame, places: DataFrame,
-                    broadcast_aliases: bool = True,
                     grams: DataFrame | None = None,
                     cap: int | None = None) -> DataFrame:
     """Exact/alias mention candidates with longest-match overlap resolution.
@@ -254,8 +253,7 @@ def detect_mentions(documents: DataFrame, places: DataFrame,
                     F.col("m.n").alias("n"),
                     F.col("m.gram").alias("mention_text"),
                     F.lower(F.col("m.gram")).alias("gram_norm")))
-    if broadcast_aliases:
-        am = F.broadcast(am)
+    am = F.broadcast(am)
     return (surv.join(am, surv.gram_norm == am.alias_norm, "inner")
             .select("doc_id", "span_offset", "start", "n", "mention_text",
                     "geoname_id"))

@@ -14,6 +14,9 @@ explicit repartitioning) and media spans pass through untouched.
 
 from __future__ import annotations
 
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,25 +49,15 @@ EDGES_SCHEMA = ("subj string, obj string, confidence double,"
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
                  doc_partitions: int | None = None,
-                 force: bool = False,
-                 corpus_clustered: bool = False,
-                 fuzzy_max_seen: int | None = None,
-                 max_adm_level: int = 4) -> dict[str, DataFrame]:
+                 force: bool = False) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns the stage outputs.
 
-    `corpus_clustered=True` skips the initial corpus repartition for
-    sources already laid out clustered by doc_id (an Iceberg table
-    bucketed/sorted on doc_id, or a re-ingested checkpoint written with
-    partitionBy semantics): plain parquet carries no clustering metadata
-    Catalyst could trust, so the caller asserts it. At 100 TB this saves
-    the single largest shuffle in the job; with the flag off, the one
-    corpus exchange is shared across every downstream consumer
-    (ReuseExchange + subset distribution satisfaction).
-    `fuzzy_max_seen` / `max_adm_level` exist for the bench A/B only
-    (round-4 VERDICT item 1): fuzzy_max_seen=1 restricts the fuzzy gate
-    to the round-3 zero-exact behaviour and max_adm_level=3 drops the
-    ADM4 edge family, isolating the marginal cost of the round-4
-    additions. Production and oracles use the defaults."""
+    `doc_partitions` sets the corpus repartition count (default: the
+    session's shuffle-partition count); `force` recomputes every stage
+    even where its checkpoint exists. The three leading stage chains run
+    concurrently: if one fails, the others' Spark jobs are cancelled
+    and its error is raised once they have stopped; a re-run resumes
+    from the stages committed before the failure."""
     ckpt = CheckpointStore(out_dir)
     # match the shuffle-partition count so the reused corpus clustering
     # carries the same parallelism as every downstream exchange
@@ -85,8 +78,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # WITHOUT further corpus-wide exchanges — one shuffle of the corpus
     # total, reused across DAG branches (ReuseExchange)
     raw_docs = load(spark, sf_dir, "geo_documents")
-    docs = (raw_docs if corpus_clustered
-            else raw_docs.repartition(n_part, F.col("doc_id")))
+    docs = raw_docs.repartition(n_part, F.col("doc_id"))
     fprio = load(spark, sf_dir, "feature_priority")
     wprio = load(spark, sf_dir, "wd_type_priority")
 
@@ -96,9 +88,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
             # n_docs from the raw scan (row-group stats count) — counting
             # the repartitioned df would run the corpus exchange twice
             lambda: linking.link_mentions(
-                docs, places, n_docs=raw_docs.count(),
-                fuzzy_max_seen=(fuzzy_max_seen if fuzzy_max_seen is not None
-                                else linking.FUZZY_MAX_SEEN)),
+                docs, places, n_docs=raw_docs.count()),
             force=force)
         mention_t = ckpt.get_or_compute(
             spark, "mention_triples",
@@ -111,7 +101,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         # 106-221) — all rewritten through canonicalization downstream
         fams = [
             direct_link.direct_id_links(wd, places),
-            admin.admin_triples(places, max_level=max_adm_level),
+            admin.admin_triples(places),
             spatial.promote_near_to_same_as(
                 spatial.spatial_links(wd, places, fprio, wprio)),
             biography.born_in(persons, wd),
@@ -138,20 +128,14 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # chain's tasks. FIFO scheduling keeps the first-submitted (longest)
     # chain prioritized; resume semantics are unchanged — each stage
     # still checks its own checkpoint independently.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_linked = pool.submit(_linked_chain)
-        f_gaz = pool.submit(
-            lambda: ckpt.get_or_compute(
-                spark, "gazetteer_triples", _gaz, force=force))
-        f_nodes = pool.submit(
-            lambda: ckpt.get_or_compute(
-                spark, "nodes",
-                lambda: build_nodes(places, wd, persons, orgs, post_offices),
-                partition_by=["label"], force=force))
-        linked, mention_t = f_linked.result()
-        gaz_triples = f_gaz.result()
-        nodes = f_nodes.result()
+    (linked, mention_t), gaz_triples, nodes = run_chains(spark, [
+        _linked_chain,
+        lambda: ckpt.get_or_compute(
+            spark, "gazetteer_triples", _gaz, force=force),
+        lambda: ckpt.get_or_compute(
+            spark, "nodes",
+            lambda: build_nodes(places, wd, persons, orgs, post_offices),
+            partition_by=["label"], force=force)])
 
     # CC convergence audit (no silent iteration caps): the stats this
     # stage's own CC run returned, read by extra_metrics_fn after compute
@@ -178,6 +162,38 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     return {"linked_mentions": linked, "mention_triples": mention_t,
             "gazetteer_triples": gaz_triples, "canonical_triples": canon,
             "nodes": nodes, "edges": edges}
+
+
+def run_chains(spark: SparkSession, chains: list) -> list:
+    """Run the no-argument `chains` on concurrent driver threads and
+    return their results in order.
+
+    Fail fast: once a chain raises, every Spark job of the others is
+    cancelled (one job tag per run on all chain threads, re-cancelled
+    until they have stopped, since a chain may start its next job
+    meanwhile) and the first error is raised."""
+    sc = spark.sparkContext
+    tag = f"run_chains-{uuid.uuid4().hex}"
+
+    def tagged(chain):
+        def run():
+            sc.addJobTag(tag)
+            try:
+                return chain()
+            finally:
+                sc.removeJobTag(tag)
+        return run
+
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = [pool.submit(tagged(c)) for c in chains]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception()]
+        if failed:
+            while pending:
+                sc.cancelJobsWithTag(tag)
+                _, pending = wait(pending, timeout=0.05)
+            raise failed[0].exception()
+        return [f.result() for f in futures]
 
 
 def edge_table(triples: DataFrame, nodes: DataFrame, n_part: int

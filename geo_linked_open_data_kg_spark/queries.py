@@ -185,6 +185,17 @@ FROM conf WHERE rank <= 5 AND conf >= 0.5
 """
 
 
+_CLASSIFY = CLASSIFY_SQL.format(conf="conf", d="distance_km",
+                               sp="wd_priority", dp="gn_priority")
+# G2 NEAR->SAME_AS promotion over the spatial links (the flagship
+# canonical-triples oracle embeds it)
+_PROMOTED_ORACLE = _SPATIAL_ORACLE.replace(
+    "SELECT qid AS subj,\n       " + _CLASSIFY,
+    "SELECT qid AS subj,\n       CASE WHEN " + _CLASSIFY
+    + " = 'nearTo' AND round(conf, 4) >= 0.85 AND round(distance_km, 4)"
+      " <= 1.0 THEN 'sameAs' ELSE " + _CLASSIFY + " END")
+
+
 @register("kg_spatial_links", _SPATIAL_ORACLE)
 def kg_spatial_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spatial.spatial_links(
@@ -459,20 +470,15 @@ def kg_linked_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- biography / postal edges ----
 
-@register("kg_born_in", f"""
+_BORN_IN_SQL = f"""
 SELECT p.qid AS subj, 'bornIn' AS pred, p.birth_place_qid AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'wikidata_claim' AS evidence
 FROM read_parquet('{_sp("persons")}') p
 JOIN read_parquet('{_sp("wikidata_places")}') w ON p.birth_place_qid = w.qid
 WHERE p.birth_place_qid IS NOT NULL
-""")
-def kg_born_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_linked_open_data_kg_spark.operators import biography
-    return biography.born_in(load(spark, sf_dir, "persons"),
-                             load(spark, sf_dir, "wikidata_places"))
+"""
 
-
-@register("kg_resided_worked", f"""
+_RESIDED_WORKED_SQL = f"""
 SELECT DISTINCT p.qid AS subj, 'residedIn' AS pred, r.q AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'wikidata_claim' AS evidence
 FROM read_parquet('{_sp("persons")}') p, unnest(p.residence_qids) r(q)
@@ -482,19 +488,9 @@ SELECT DISTINCT p.qid AS subj, 'workedAt' AS pred, wk.q AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'wikidata_claim' AS evidence
 FROM read_parquet('{_sp("persons")}') p, unnest(p.work_location_qids) wk(q)
 JOIN read_parquet('{_sp("wikidata_places")}') wd ON wd.qid = wk.q
-""")
-def kg_resided_worked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J12 ID-array containment edges (residedIn P551 + workedAt P937) in
-    one registry slot — the two operators stay separate; the query unions
-    them so both keep value-level oracle coverage under the driver's
-    50-entry correctness cap."""
-    from geo_linked_open_data_kg_spark.operators import biography
-    p = load(spark, sf_dir, "persons")
-    w = load(spark, sf_dir, "wikidata_places")
-    return biography.resided_in(p, w).unionByName(biography.worked_at(p, w))
+"""
 
-
-@register("kg_spouse_pairs", f"""
+_SPOUSE_PAIRS_SQL = f"""
 WITH ex AS (
   SELECT p.qid, s.sp FROM read_parquet('{_sp("persons")}') p,
        unnest(p.spouse_qids) s(sp)
@@ -508,13 +504,9 @@ SELECT DISTINCT least(qid, sp) AS subj, 'spouseOf' AS pred,
        greatest(qid, sp) AS obj, CAST(1.0 AS DOUBLE) AS confidence,
        'family_record' AS evidence
 FROM gated
-""")
-def kg_spouse_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_linked_open_data_kg_spark.operators import biography
-    return biography.spouse_pairs(load(spark, sf_dir, "persons"))
+"""
 
-
-@register("kg_parent_of", f"""
+_PARENT_OF_SQL = f"""
 SELECT DISTINCT p.mother_qid AS subj, 'parentOf' AS pred, p.qid AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'mother' AS evidence
 FROM read_parquet('{_sp("persons")}') p
@@ -525,40 +517,26 @@ SELECT DISTINCT p.father_qid, 'parentOf', p.qid, CAST(1.0 AS DOUBLE), 'father'
 FROM read_parquet('{_sp("persons")}') p
 WHERE p.father_qid IS NOT NULL AND EXISTS (
   SELECT 1 FROM read_parquet('{_sp("persons")}') k WHERE k.qid = p.father_qid)
-""")
-def kg_parent_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_linked_open_data_kg_spark.operators import biography
-    return biography.parent_of(load(spark, sf_dir, "persons"))
+"""
 
-
-@register("kg_citizen_of", f"""
+_CITIZEN_OF_SQL = f"""
 SELECT p.qid AS subj, 'citizenOf' AS pred, p.citizenship_qid AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'wikidata_claim' AS evidence
 FROM read_parquet('{_sp("persons")}') p
 WHERE p.citizenship_qid IS NOT NULL AND EXISTS (
   SELECT 1 FROM read_parquet('{_sp("wikidata_places")}') w
   WHERE w.country_qid = p.citizenship_qid)
-""")
-def kg_citizen_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_linked_open_data_kg_spark.operators import biography
-    return biography.citizen_of(load(spark, sf_dir, "persons"),
-                                load(spark, sf_dir, "wikidata_places"))
+"""
 
-
-@register("kg_headquartered_in", f"""
+_HEADQUARTERED_IN_SQL = f"""
 SELECT o.qid AS subj, 'headquarteredIn' AS pred, o.headquarters_qid AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'wikidata_claim' AS evidence
 FROM read_parquet('{_sp("organizations")}') o
 JOIN read_parquet('{_sp("wikidata_places")}') w ON o.headquarters_qid = w.qid
 WHERE o.headquarters_qid IS NOT NULL
-""")
-def kg_headquartered_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_linked_open_data_kg_spark.operators import biography
-    return biography.headquartered_in(load(spark, sf_dir, "organizations"),
-                                      load(spark, sf_dir, "wikidata_places"))
+"""
 
-
-@register("kg_founded", f"""
+_FOUNDED_SQL = f"""
 SELECT o.qid AS subj, 'foundedIn' AS pred,
        o.formation_location_qid AS obj,
        CAST(1.0 AS DOUBLE) AS confidence, 'wikidata_claim' AS evidence
@@ -566,39 +544,42 @@ FROM read_parquet('{_sp("organizations")}') o
 JOIN read_parquet('{_sp("wikidata_places")}') w
   ON o.formation_location_qid = w.qid
 WHERE o.formation_location_qid IS NOT NULL
-""")
-def kg_founded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FOUNDED edge from P740 (ENTITY_LINKING_PLAN_UPDATED.md:187-198)."""
-    from geo_linked_open_data_kg_spark.operators import biography
-    return biography.founded_in(load(spark, sf_dir, "organizations"),
-                                load(spark, sf_dir, "wikidata_places"))
+"""
+
+_BORN_IN_PLACE_SQL = f"""
+WITH sameas AS (
+  SELECT w.qid AS subj, 'gn:' || g.geoname_id AS obj
+  FROM read_parquet('{_sp("wikidata_places")}') w
+  JOIN read_parquet('{_sp("places")}') g
+    ON {direct_link.EXTRACT_ID_SQL.format(c="w.geonames_id")} = g.geoname_id
+  WHERE w.geonames_id IS NOT NULL
+)
+SELECT DISTINCT p.qid AS subj, 'bornInPlace' AS pred, s.obj AS obj,
+       CAST(1.0 AS DOUBLE) AS confidence, 'derived_2hop' AS evidence
+FROM read_parquet('{_sp("persons")}') p
+JOIN read_parquet('{_sp("wikidata_places")}') w ON p.birth_place_qid = w.qid
+JOIN sameas s ON s.subj = p.birth_place_qid
+"""
+
+# The edge families above share one (subj, pred, obj, confidence, evidence)
+# schema and their preds are disjoint, so the person and org unions below
+# each fill one registry slot and keep every family's rows value-hashed;
+# the per-edge operators and their goldens stay separate.
 
 
-# Registry fold (round-5): the four person-edge and two org-edge queries
-# above share one (subj, pred, obj, confidence, evidence) schema, so they
-# union into TWO slots with ZERO value-coverage loss — every row each
-# family produced is still oracle-hashed, the preds are disjoint so
-# UNION ALL cannot collapse rows, and the per-edge operators/goldens stay.
-# The four freed slots go to new training-data ops (td_pii_stats,
-# td_repetition_stats, td_sequence_packing, td_decontaminate). The six
-# component registrations are retired at the bottom of this module AFTER
-# every oracle composition that embeds them.
-
-_PERSON_EDGE_PARTS = ["kg_born_in", "kg_citizen_of", "kg_spouse_pairs",
-                      "kg_parent_of"]
-_ORG_EDGE_PARTS = ["kg_headquartered_in", "kg_founded"]
+def _union_oracle(*parts: str) -> str:
+    return "\nUNION ALL\n".join(f"SELECT * FROM (\n{p}\n)" for p in parts)
 
 
-@register("kg_person_edges", "\nUNION ALL\n".join(
-    f"SELECT * FROM (\n{ORACLES[n]}\n)" for n in _PERSON_EDGE_PARTS))
+@register("kg_person_edges", _union_oracle(
+    _BORN_IN_SQL, _CITIZEN_OF_SQL, _SPOUSE_PAIRS_SQL, _PARENT_OF_SQL,
+    _RESIDED_WORKED_SQL, _BORN_IN_PLACE_SQL))
 def kg_person_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Person-edge families in one registry slot: J3 QID equi-joins
     (bornIn, citizenOf, spouseOf, parentOf), J12 ID-array containment
     (residedIn P551, workedAt P937) and the J14 2-hop semi-join
     (bornInPlace); the per-edge operators stay separate. All preds are
-    disjoint, so the UNION ALL keeps every family's rows value-hashed.
-    The oracle is recomposed below kg_born_in_place's registration (its
-    SQL does not exist yet at this decoration point)."""
+    disjoint, so the UNION ALL keeps every family's rows value-hashed."""
     from geo_linked_open_data_kg_spark.operators import biography
     p = load(spark, sf_dir, "persons")
     w = load(spark, sf_dir, "wikidata_places")
@@ -612,8 +593,7 @@ def kg_person_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(biography.born_in_place(p, w, same)))
 
 
-@register("kg_org_edges", "\nUNION ALL\n".join(
-    f"SELECT * FROM (\n{ORACLES[n]}\n)" for n in _ORG_EDGE_PARTS))
+@register("kg_org_edges", _union_oracle(_HEADQUARTERED_IN_SQL, _FOUNDED_SQL))
 def kg_org_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 organization-edge families (headquarteredIn P159, foundedIn
     P740) in one registry slot; the operators stay separate."""
@@ -641,38 +621,6 @@ def kg_dangling_fk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geo_linked_open_data_kg_spark.operators import biography
     return biography.dangling_fk_counts(load(spark, sf_dir, "persons"),
                                         load(spark, sf_dir, "wikidata_places"))
-
-
-@register("kg_born_in_place", f"""
-WITH sameas AS (
-  SELECT w.qid AS subj, 'gn:' || g.geoname_id AS obj
-  FROM read_parquet('{_sp("wikidata_places")}') w
-  JOIN read_parquet('{_sp("places")}') g
-    ON {direct_link.EXTRACT_ID_SQL.format(c="w.geonames_id")} = g.geoname_id
-  WHERE w.geonames_id IS NOT NULL
-)
-SELECT DISTINCT p.qid AS subj, 'bornInPlace' AS pred, s.obj AS obj,
-       CAST(1.0 AS DOUBLE) AS confidence, 'derived_2hop' AS evidence
-FROM read_parquet('{_sp("persons")}') p
-JOIN read_parquet('{_sp("wikidata_places")}') w ON p.birth_place_qid = w.qid
-JOIN sameas s ON s.subj = p.birth_place_qid
-""")
-def kg_born_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_linked_open_data_kg_spark.operators import biography
-    wd = load(spark, sf_dir, "wikidata_places")
-    same = direct_link.direct_id_links(wd, load(spark, sf_dir, "places"))
-    return biography.born_in_place(load(spark, sf_dir, "persons"), wd, same)
-
-
-# Round-5 fold, part 2: absorb the J12 containment edges and the J14
-# 2-hop edges into kg_person_edges (disjoint preds residedIn / workedAt /
-# bornInPlace — zero value-coverage loss). The oracle is recomposed here
-# because kg_born_in_place's SQL is only registered above, after the
-# kg_person_edges decoration ran. Both component slots retire at the
-# bottom of the module with the other folded edge families.
-ORACLES["kg_person_edges"] = "\nUNION ALL\n".join(
-    f"SELECT * FROM (\n{ORACLES[n]}\n)"
-    for n in [*_PERSON_EDGE_PARTS, "kg_resided_worked", "kg_born_in_place"])
 
 
 @register("kg_migration_flows", f"""
@@ -814,28 +762,22 @@ def agg_top_feature_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- flagship: canonicalized triple set --------
 
-_PROMOTED_SPATIAL_SQL = None  # assembled below after kg_promoted_links
-
-
-def _canonical_oracle() -> str:
-    spatial_promoted = ORACLES["kg_promoted_links"]
-    admin_union = ORACLES["kg_admin_triples"]
-    return f"""
+_CANONICAL_ORACLE = f"""
 WITH RECURSIVE triples AS (
   SELECT subj, pred, obj, confidence, evidence FROM (
     {ORACLES["kg_direct_id_links"]}
   )
   UNION ALL
   SELECT subj, pred, obj, confidence, evidence FROM (
-    {admin_union}
+    {ORACLES["kg_admin_triples"]}
   )
   UNION ALL
   SELECT subj, pred, obj, confidence, evidence FROM (
-    {spatial_promoted}
+    {_PROMOTED_ORACLE}
   )
   UNION ALL
   SELECT subj, pred, obj, confidence, evidence FROM (
-    {ORACLES["kg_born_in"]}
+    {_BORN_IN_SQL}
   )
   UNION ALL
   SELECT p.qid AS subj, 'diedIn' AS pred, p.death_place_qid AS obj,
@@ -874,6 +816,7 @@ GROUP BY subj, pred, obj
 """
 
 
+@register("kg_canonical_gazetteer_triples", _CANONICAL_ORACLE)
 def kg_canonical_gazetteer_triples(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """Flagship: the pipeline's gazetteer triple set (no document mentions —
@@ -1040,20 +983,6 @@ def kg_hgis_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qid").alias("point_id"), "name", "latitude", "longitude")
     return spatial.hgis_links(points, load(spark, sf_dir, "places"),
                               load(spark, sf_dir, "feature_priority"))
-
-
-@register("kg_promoted_links", _SPATIAL_ORACLE.replace(
-    "SELECT qid AS subj,\n       " + CLASSIFY_SQL.format(
-        conf="conf", d="distance_km", sp="wd_priority", dp="gn_priority"),
-    "SELECT qid AS subj,\n       CASE WHEN " + CLASSIFY_SQL.format(
-        conf="conf", d="distance_km", sp="wd_priority", dp="gn_priority")
-    + " = 'nearTo' AND round(conf, 4) >= 0.85 AND round(distance_km, 4)"
-      " <= 1.0 THEN 'sameAs' ELSE " + CLASSIFY_SQL.format(
-        conf="conf", d="distance_km", sp="wd_priority", dp="gn_priority")
-    + " END"))
-def kg_promoted_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G2: NEAR->SAME_AS promotion applied over the spatial links."""
-    return spatial.promote_near_to_same_as(kg_spatial_links(spark, sf_dir))
 
 
 @register("kg_link_coverage", f"""
@@ -1724,15 +1653,13 @@ SELECT group_id, doc_id, (rn = 1) AS is_keeper, n_members FROM ranked
 """
 
 
-@register("td_dup_groups", None)
+@register("td_dup_groups", _dup_groups_oracle())
 def td_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geo_linked_open_data_kg_spark.operators.dedup import (
         duplicate_groups,
     )
     return duplicate_groups(_aug_documents(spark, sf_dir))[0]
 
-
-ORACLES["td_dup_groups"] = _dup_groups_oracle()
 
 
 def _profile_values() -> str:
@@ -1852,8 +1779,7 @@ def td_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------- round-5 training-data additions -----------
-# Four new ops in the slots freed by the person/org edge folds: PII
-# scrub, Gopher repetition signals, training-sequence packing, and
+# PII scrub, Gopher repetition signals, training-sequence packing, and
 # benchmark decontamination. Oracle SQL is generated from the SAME
 # constants the operators use, so engine and oracle cannot drift.
 
@@ -2364,39 +2290,6 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("count_order")))
 
 
-# Retired registry entries (driver's correctness run caps at 50 queries;
-# round-3 judge found 3 registered-but-unrun — see VERDICT r3 "What's
-# wrong" #1). tpch_top_suppliers_by_revenue was redundant with tpch_q1 +
-# ev_topk_per_type for the broadcast-join/top-k shape; A3 distinct-by-group
-# is folded into agg_places_by_country; td_simhash's signature values are
-# fully exercised by td_simhash_banded_pairs (its oracle recomputes the
-# signatures from text).
-
-# flagship registration deferred: its oracle composes oracles defined above
-QUERIES["kg_canonical_gazetteer_triples"] = kg_canonical_gazetteer_triples
-ORACLES["kg_canonical_gazetteer_triples"] = _canonical_oracle()
-
-# Registry fold (round-5, VERDICT r4 item 2): kg_promoted_links is a pure
-# threshold filter over kg_spatial_links' rows (identical row count every
-# round), and its VALUE semantics stay oracle-covered through the flagship
-# kg_canonical_gazetteer_triples + kg_nodes compositions (whose SQL embeds
-# the promoted-links oracle, assembled above BEFORE this retirement). Its
-# slot goes to td_ann_ivf_topk — the one dedup/ANN-family member that
-# shipped pytest-gated in round 4. The operator + promotion goldens remain
-# in tests/test_pipeline.py and the pipeline itself.
-del QUERIES["kg_promoted_links"]
-del ORACLES["kg_promoted_links"]
-
-# Registry fold (round-5): the six biography/org edge queries union into
-# kg_person_edges / kg_org_edges above (disjoint preds, identical rows —
-# zero value-coverage loss). Retired here, AFTER _canonical_oracle() and
-# the union oracles composed their SQL. Operators + goldens remain.
-for _n in ("kg_born_in", "kg_citizen_of", "kg_spouse_pairs", "kg_parent_of",
-           "kg_headquartered_in", "kg_founded",
-           "kg_resided_worked", "kg_born_in_place"):
-    del QUERIES[_n]
-    del ORACLES[_n]
-
 # Reorder so pipeline-critical value gates sit in the FIRST entries: the
 # driver runs correctness in registration order with a hard 50-entry cap,
 # so anything past 50 is silently unverified. Priority list first, then
@@ -2413,8 +2306,7 @@ _PRIORITY = [
     "td_dup_groups",
     "kg_hierarchy_closure",
 ]
-_order = ([n for n in _PRIORITY if n in QUERIES]
-          + [n for n in QUERIES if n not in _PRIORITY])
+_order = [*_PRIORITY, *(n for n in QUERIES if n not in _PRIORITY)]
 QUERIES = {n: QUERIES[n] for n in _order}
-ORACLES = {n: ORACLES[n] for n in _order if n in ORACLES}
+ORACLES = {n: ORACLES[n] for n in _order}
 assert len(QUERIES) <= 50, f"registry overflow: {len(QUERIES)} > 50"

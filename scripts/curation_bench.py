@@ -15,7 +15,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geo_linked_open_data_kg_spark.plans.curation import (  # noqa: E402
     run_curation_pipeline,

@@ -19,9 +19,10 @@ Local smoke: python scripts/run_curation_submit.py --sf-dir
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def parse_weights(s: str | None) -> dict[str, float]:

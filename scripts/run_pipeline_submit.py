@@ -18,9 +18,10 @@ Local smoke: python scripts/run_pipeline_submit.py --sf-dir
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -25,6 +25,8 @@ import os
 import subprocess
 import sys
 
+# the checkout this script lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MULT = int(os.environ.get("SCALE_MULT", "8"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 EXEC_MODE = os.environ.get("EXEC_MODE", "local-cluster")
@@ -34,7 +36,8 @@ LEVELS = [int(x) for x in os.environ.get("SCALE_LEVELS", "1,4").split(",")]
 
 WORKER = r"""
 import json, shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+root = sys.argv[6]
+sys.path.insert(0, root)
 master = sys.argv[1]; total_cores = int(sys.argv[2])
 mult = int(sys.argv[3]); sf_dir = sys.argv[4]; exec_mem = sys.argv[5]
 
@@ -52,7 +55,7 @@ spark.sparkContext.setLogLevel("ERROR")
 if master.startswith("local-cluster"):
     # real executors have their own Python workers: ship the package the
     # same way production does (spark-submit --py-files)
-    spark.sparkContext.addPyFile("/root/repo/dist/geo_kg_spark.zip")
+    spark.sparkContext.addPyFile(f"{root}/dist/geo_kg_spark.zip")
 
 docs = load(spark, sf_dir, "geo_documents")
 copies = [docs.withColumn("doc_id", F.concat("doc_id", F.lit(f"#{i}")))
@@ -150,7 +153,7 @@ def main() -> None:
             "SPARK_DRIVER_MEM", "24g"))
         out = subprocess.run(
             [sys.executable, "-c", WORKER, master, str(total_cores),
-             str(MULT), SF_DIR, f"{EXEC_MEM_MB}m"],
+             str(MULT), SF_DIR, f"{EXEC_MEM_MB}m", ROOT],
             capture_output=True, text=True, env=env)
         if out.returncode != 0:
             sys.stderr.write(out.stderr[-4000:])
@@ -180,7 +183,7 @@ def main() -> None:
 **Scaling efficiency (N -> {hi // lo}N): steady {eff:.3f}** =
 {thr_hi} / ({ratio:.0f} x {thr_lo}); cold {cold_eff:.3f}
 """
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write(section)
     print(section)
 

@@ -22,6 +22,8 @@ import os
 import subprocess
 import sys
 
+# the checkout this script lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MULT = int(os.environ.get("SCALE_MULT", "64"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 EXEC_MODE = os.environ.get("EXEC_MODE", "local-cluster")
@@ -35,7 +37,8 @@ if len(LEVELS) != 2:
 
 WORKER = r"""
 import json, shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+root = sys.argv[6]
+sys.path.insert(0, root)
 master = sys.argv[1]; total_cores = int(sys.argv[2])
 mult = int(sys.argv[3]); sf_dir = sys.argv[4]; exec_mem = sys.argv[5]
 
@@ -47,7 +50,7 @@ spark = get_spark(f"td_scale_{total_cores}", cores=total_cores,
                   executor_memory=exec_mem)
 spark.sparkContext.setLogLevel("ERROR")
 if master.startswith("local-cluster"):
-    spark.sparkContext.addPyFile("/root/repo/dist/geo_kg_spark.zip")
+    spark.sparkContext.addPyFile(f"{root}/dist/geo_kg_spark.zip")
 
 from geo_linked_open_data_kg_spark.operators.sampling import domain_mixture
 from geo_linked_open_data_kg_spark.operators.textstats import (
@@ -137,7 +140,7 @@ def main() -> None:
             "SPARK_DRIVER_MEM", "24g"))
         out = subprocess.run(
             [sys.executable, "-c", WORKER, master, str(total_cores),
-             str(MULT), SF_DIR, f"{EXEC_MEM_MB}m"],
+             str(MULT), SF_DIR, f"{EXEC_MEM_MB}m", ROOT],
             capture_output=True, text=True, env=env)
         if out.returncode != 0:
             sys.stderr.write(out.stderr[-4000:])
@@ -172,7 +175,7 @@ hashes asserted across levels).
 **Scaling efficiency (N -> {hi // lo}N): steady {eff:.3f}** =
 {thr_hi} / ({ratio:.0f} x {thr_lo}); cold {cold_eff:.3f}
 """
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write(section)
     print(section)
 

@@ -75,3 +75,13 @@ def test_entry_runs(spark):
     df = entrymod.entry(spark)
     assert df.count() >= 0
     assert df.columns == ["subj", "pred", "obj", "confidence", "evidence"]
+
+
+def test_registry_contract():
+    """The driver verifies only the first 50 entries and only those with
+    an oracle: the registry holds exactly 50, every one with an oracle,
+    and the pipeline-critical value gates lead it."""
+    from geo_linked_open_data_kg_spark import queries as q
+    assert len(q.QUERIES) == 50
+    assert set(q.QUERIES) == set(q.ORACLES)
+    assert list(q.QUERIES)[:len(q._PRIORITY)] == q._PRIORITY

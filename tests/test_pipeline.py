@@ -123,6 +123,34 @@ def test_metrics_and_lineage_written(spark, out_dir):
         assert {r["stage"] for r in lin.collect()} == {stage}
 
 
+def test_failing_chain_cancels_its_siblings_and_resumes(
+        spark, out_dir, tmp_path, monkeypatch):
+    """A stage chain that fails stops the run before the other chains
+    commit: their Spark jobs are cancelled and the failure is raised.
+    A re-run without the fault resumes to the uninterrupted build's
+    canonical_triples and edges."""
+    from geo_linked_open_data_kg_spark.plans import pipeline
+    from geo_linked_open_data_kg_spark.plans.checkpoint import CheckpointStore
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected build_nodes failure")
+
+    ckpt = str(tmp_path / "graph")
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "build_nodes", boom)
+        with pytest.raises(RuntimeError, match="injected build_nodes"):
+            run_pipeline(spark, SF_DIR, ckpt)
+    store = CheckpointStore(ckpt)
+    assert [s for s in STAGES if store.exists(s)] == []
+
+    resumed = run_pipeline(spark, SF_DIR, ckpt)
+    ref = run_pipeline(spark, SF_DIR, out_dir)  # the uninterrupted build
+    for stage in ("canonical_triples", "edges"):
+        got = sorted(map(tuple, resumed[stage].collect()))
+        want = sorted(map(tuple, ref[stage].collect()))
+        assert len(got) > 0 and got == want, stage
+
+
 def test_commit_runs_only_the_write_job(spark, tmp_path):
     """A stage commit of an unpartitioned table with no pred column is
     one Spark job, the write; a pred-partitioned commit reads its

@@ -1,4 +1,5 @@
-"""Batch/stream parity for the windowed event aggregation."""
+"""Batch/stream parity for incremental document ingest: mention
+detection, the linking cascade and per-document curation."""
 
 from __future__ import annotations
 
@@ -6,12 +7,6 @@ import shutil
 import tempfile
 
 import pytest
-
-from geo_linked_open_data_kg_spark.streaming.events import (
-    read_events_stream,
-    run_available_now,
-    windowed_counts,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -21,212 +16,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="kg_stream_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_matches_batch(spark, tmpdir):
-    import os
-    src = f"{tmpdir}/events"
-    os.makedirs(src)  # file source streams a DIRECTORY of files
-    shutil.copy(f"{SF_DIR}/events.parquet", f"{src}/part-0.parquet")
-
-    stream = read_events_stream(spark, src)
-    assert stream.isStreaming
-    agg = windowed_counts(stream)
-    run_available_now(agg, "ev_win", f"{tmpdir}/ckpt")
-
-    got = {tuple(r) for r in spark.sql("SELECT * FROM ev_win").collect()}
-    batch = windowed_counts(
-        spark.read.parquet(f"{SF_DIR}/events.parquet"))
-    want = {tuple(r) for r in batch.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_session_window_builtin_matches_lag_based_batch(spark):
-    """The built-in session_window groups events exactly like the
-    lag+running-sum batch sessionization (queries.ev_sessionization)."""
-    from pyspark.sql import functions as F
-
-    from geo_linked_open_data_kg_spark import queries as q
-    from geo_linked_open_data_kg_spark.streaming.events import session_windows
-
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    sw = session_windows(events.withColumn(
-        "ts", F.col("ts").cast("timestamp")))
-    got = {(r["user_id"], str(r["session_start"])[:19], r["n_events"])
-           for r in sw.collect()}
-    lag = q.ev_sessionization(spark, "/root/testdata/sf0.001")
-    want = {(r["user_id"], r["session_start"], r["n_events"])
-            for r in lag.collect()}  # already 'yyyy-MM-dd HH:mm:ss'
-    assert got == want and len(got) > 0
-
-
-def _py_capped_sessions(rows, gap_s=1800, cap_s=14400):
-    """Pure-Python reference for gap+cap sessionization."""
-    from collections import defaultdict
-    by_user = defaultdict(list)
-    for u, t in rows:
-        by_user[u].append(t)
-    out = set()
-    for u, ts in by_user.items():
-        ts.sort()
-        start = last = None
-        n = 0
-        for t in ts:
-            if n == 0:
-                start = last = t
-                n = 1
-            elif t - last > gap_s or t - start > cap_s:
-                out.add((u, start, last, n))
-                start = last = t
-                n = 1
-            else:
-                last = t
-                n += 1
-        if n:
-            out.add((u, start, last, n))
-    return out
-
-
-def test_capped_sessionization_batch_matches_python_reference(spark):
-    from pyspark.sql import functions as F
-
-    from geo_linked_open_data_kg_spark.streaming.events import (
-        sessionize_capped_batch,
-    )
-
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    got = {(r["user_id"],
-            int(r["session_start"].timestamp()),
-            int(r["session_end"].timestamp()),
-            r["n_events"])
-           for r in sessionize_capped_batch(events).collect()}
-    rows = [(r["user_id"], int(r["ts_s"]))
-            for r in events.select(
-                "user_id",
-                F.col("ts").cast("timestamp").cast("long").alias("ts_s"))
-            .collect()]
-    assert got == _py_capped_sessions(rows) and len(got) > 0
-    # the duration cap must actually split at least one long session
-    # (else the operator is indistinguishable from plain gap sessions)
-    plain = _py_capped_sessions(rows, cap_s=10**12)
-    assert len(got) >= len(plain)
-
-
-def test_capped_sessionization_stream_matches_batch(spark, tmpdir):
-    """applyInPandasWithState twin: sentinel far-future events per user
-    close every real session deterministically within availableNow."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from geo_linked_open_data_kg_spark.streaming.events import (
-        EVENTS_SCHEMA,
-        sessionize_capped_batch,
-        sessionize_capped_stream,
-        run_available_now,
-    )
-
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    sentinel_ts = events.agg(
-        (F.max("ts").cast("long") + 864000).cast("timestamp")).first()[0]
-    sentinels = (events.select("user_id").distinct()
-                 .select(F.lit(-1).cast("long").alias("event_id"),
-                         F.lit(sentinel_ts).alias("ts"), "user_id",
-                         F.lit("sentinel").alias("event_type"),
-                         F.lit(0.0).alias("value"),
-                         F.lit(None).cast("string").alias("props")))
-    aug = events.select([f.name for f in EVENTS_SCHEMA]).unionByName(sentinels)
-
-    src = f"{tmpdir}/ev_caps"
-    os.makedirs(src, exist_ok=True)
-    aug.coalesce(1).write.mode("overwrite").parquet(src)
-
-    from geo_linked_open_data_kg_spark.streaming.events import (
-        read_events_stream,
-    )
-    stream = read_events_stream(spark, src)
-    out = sessionize_capped_stream(stream)
-    run_available_now(out, "ev_caps", f"{tmpdir}/ckpt2",
-                      output_mode="append")
-    got = {tuple(r) for r in spark.sql(
-        "SELECT user_id, CAST(session_start AS LONG), "
-        "CAST(session_end AS LONG), n_events FROM ev_caps "
-        f"WHERE CAST(session_start AS LONG) < {int(sentinel_ts.timestamp())}"
-    ).collect()}
-    want = {(r["user_id"], int(r["session_start"].timestamp()),
-             int(r["session_end"].timestamp()), r["n_events"])
-            for r in sessionize_capped_batch(events).collect()}
-    assert got == want and len(got) > 0
-
-
-def test_capped_sessionization_two_batch_out_of_order(spark, tmpdir):
-    """Cross-microbatch disorder (round-2 ADVICE): a second batch carries
-    events older than the stored session state. The guard must (a) fold
-    an in-session late event without moving bounds, (b) emit a
-    beyond-gap late event as its own singleton, and (c) never produce
-    session_end < session_start."""
-    import os
-
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from geo_linked_open_data_kg_spark.streaming.events import (
-        EVENTS_SCHEMA,
-        read_events_stream,
-        run_available_now,
-        sessionize_capped_stream,
-    )
-
-    def _ev(eid, user, t):
-        return Row(event_id=eid, ts=t, user_id=user, event_type="e",
-                   value=0.0, props="p")
-
-    def _write(rows, name):
-        df = (spark.createDataFrame(rows)
-              .withColumn("ts", F.col("ts").cast("timestamp"))
-              .withColumn("props", F.col("props").cast("string"))
-              .select([f.name for f in EVENTS_SCHEMA]))
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/{name}")
-        # file source wants files in ONE dir: move the part file up
-        import glob
-        import shutil as sh
-        part = glob.glob(f"{src}/{name}/part-*.parquet")[0]
-        sh.move(part, f"{src}/{name}.parquet")
-        sh.rmtree(f"{src}/{name}")
-
-    src = f"{tmpdir}/ooo"
-    os.makedirs(src, exist_ok=True)
-
-    def _run():
-        # file sink (not memory): supports checkpoint recovery, so the
-        # second availableNow run resumes the same state
-        out = sessionize_capped_stream(read_events_stream(spark, src))
-        q = (out.writeStream.format("parquet")
-             .option("path", f"{tmpdir}/ooo_out")
-             .option("checkpointLocation", f"{tmpdir}/ck_ooo")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    base = 100000
-    _write([_ev(1, 1, base), _ev(2, 1, base + 100)], "b1")
-    _run()
-    # batch 2: in-session late (100050), beyond-gap late (95000; 5000s
-    # older than session start > 1800s gap), and a far-future watermark
-    # driver on another user to flush user 1's open session
-    _write([_ev(3, 1, base + 50), _ev(4, 1, base - 5000),
-            _ev(5, 99, base + 200000)], "b2")
-    _run()
-
-    got = [(r["user_id"], r["s"], r["e"], r["n_events"])
-           for r in spark.read.parquet(f"{tmpdir}/ooo_out")
-           .selectExpr("user_id", "CAST(session_start AS LONG) AS s",
-                       "CAST(session_end AS LONG) AS e", "n_events")
-           .collect()]
-    u1 = sorted(t for t in got if t[0] == 1)
-    assert u1 == [(1, base - 5000, base - 5000, 1),
-                  (1, base, base + 100, 3)], got
-    assert all(s <= e for _, s, e, _ in got)
 
 
 def test_stream_mention_detection_matches_batch(spark, tmpdir):
